@@ -5,34 +5,78 @@ The reference names every committed file ``<topic>+<partition>+<start>+<end>
 names as the exactly-once source of truth (offset recovery scans them,
 FileUtils.java:106-140). Spark's file sink controls its own part names, so
 this module adds the one custom step SURVEY.md §4 calls out: write each chunk
-as exactly one file, then rename to the contract name.
+as exactly one file, then rename it to the contract name.
 
-Mechanics:
-  1. ``ingest_batch`` assigns (partition dir, chunk, offset range).
-  2. repartition by (kafkaPartition, encodedPartition, chunk) — each chunk's
-     rows land in ONE task ⇒ exactly one part-file per chunk dir when
-     written with ``partitionBy(..., "chunk")``.
-  3. driver renames ``.../chunk=N/part-*.ext`` → ``../<contract name>`` via
-     the Hadoop FileSystem API (the same atomic rename the reference's
-     commitFile uses, HdfsStorage.java:151-164) and drops the chunk dirs.
+Mechanics (one pass, like the reference's TopicPartitionWriter.commitFile,
+which names a file from offsets it already tracks and renames it once):
+  1. ``ingest_batch`` assigns (partition dir, chunk); ``chunk_file_name``
+     puts each record's committed ``file_name`` on the row, from a
+     min/max-offset window over its chunk. That window rides on the chunk
+     window's (kafkaPartition, encodedPartition) hash partitioning, so it
+     adds no Exchange and every chunk stays inside one task.
+  2. the sink writes with ``partitionBy(<partition cols>, "file_name")``
+     under the hidden staging root ``<topic>/_contract_staging`` (readers
+     skip ``_``-prefixed directories) — one ``part-*`` file per
+     ``file_name=`` directory.
+  3. the driver finds every staged file with ONE ``globStatus`` over
+     ``_contract_staging/<partition dirs>/file_name=*/part-*``, renames
+     each to ``<topic>/<partition dirs>/<unescaped file_name>`` via the
+     Hadoop FileSystem API (the same atomic rename the reference's
+     commitFile uses, HdfsStorage.java:151-164) and finally drops the
+     staging root.
 
-Scale: the renames are pure NameNode metadata ops, one per committed file —
-identical cost to the reference's own commit path. The data itself moves
-once (the chunk repartition IS the write shuffle).
+No job re-runs the assignment to collect a manifest. ``IngestResult.manifest``
+names each chunk with the same ``committed_file_name`` over the same
+min/max offsets, so manifest and disk cannot disagree.
+
+Scale: the glob lists only the staging root, i.e. this batch's files plus
+those of a crashed one — never the topic's committed history. Per committed
+file: one exists check and one rename, pure NameNode metadata ops (the
+reference's own per-file commit cost); one mkdirs per partition directory
+and one recursive delete per batch. The data itself moves once (the chunk
+window's shuffle). The filesystem handle comes from ``statedir.hadoop_fs``,
+the fault-injection seam.
 
 Idempotence: re-running a batch reproduces identical chunk assignments and
-identical target names; rename-over-existing is skipped, so replays converge
-(same property the reference gets from offset-encoded names, SURVEY.md §3.3).
+identical target names. A target that already exists is not overwritten;
+the new copy goes with the staging root. A crash between the write and the
+end of the publish leaves complete ``part-*`` files in the staging root,
+which the replay's publish finds beside its own: files from different
+writes hold the same offset range, so one is published and the rest are
+dropped, and replays converge (same property the reference gets from
+offset-encoded names, SURVEY.md §3.3). Several files from ONE write in one
+``file_name=`` directory mean the chunk was split (e.g. by
+``maxRecordsPerFile``): that raises, since dropping any would lose records.
+One writer per topic, as in the reference (one task owns a topic
+partition).
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter
+from urllib.parse import unquote
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_connect_hdfs_spark import statedir
 from kafka_connect_hdfs_spark.config import HdfsSinkConfig
+from kafka_connect_hdfs_spark.operators.rotation import chunk_file_name
 from kafka_connect_hdfs_spark.pipeline import IngestResult, ingest_batch
 from kafka_connect_hdfs_spark.sinks import build_sink
+
+STAGING = "_contract_staging"
+NAME_DIR = "file_name="
+_WRITE_ID = re.compile(r"^part-\d+-([^.]+)")
+
+
+def _write_id(part_name: str) -> str:
+    """The write a part file came from: Spark's job UUID in
+    ``part-<task>-<uuid>.c<n>.<ext>``, the Avro sink's run id in
+    ``part-<task>-<run>.avro``."""
+    m = _WRITE_ID.match(part_name)
+    return m.group(1) if m else part_name
 
 
 def land_with_contract_names(
@@ -51,53 +95,53 @@ def land_with_contract_names(
     res = ingest_batch(df, cfg, topic, ts_col=ts_col, discard_partial=discard_partial)
     sink = build_sink(cfg)
     path = f"{cfg.topics_path}/{topic}"
-
-    part_cols = res.partition_columns
-    out = (
-        res.data.repartition(
-            F.col("partition"), F.col("encodedPartition"), F.col("chunk")
-        )
-        .drop("encodedPartition")
+    name = chunk_file_name(
+        topic, sink.extension, pad_width=cfg.filename_offset_zero_pad_width
     )
-    sink.write(out, path, part_cols + ["chunk"], mode="append")
-
-    # driver-side rename pass: chunk dirs -> contract names (metadata only)
-    manifest_rows = res.manifest.collect()
-    _rename_chunks(spark, path, manifest_rows, part_cols, sink.extension)
+    payload = [c for c in res.data.columns if c not in ("encodedPartition", "chunk")]
+    sink.write(
+        res.data.select(*payload, name.alias("file_name")),
+        f"{path}/{STAGING}",
+        res.partition_columns + ["file_name"],
+        mode="append",
+    )
+    _publish(spark, path, len(res.partition_columns))
     return res
 
 
-def _rename_chunks(spark, base_path, manifest_rows, part_cols, ext) -> None:
-    jvm = spark._jvm
-    jsc = spark._jsc
-    conf = jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(base_path).getFileSystem(conf)
+def _publish(spark: SparkSession, base_path: str, depth: int) -> None:
+    """Rename every staged ``<dirs>/file_name=<name>/part-*`` (``depth``
+    partition-directory levels under ``base_path``'s staging root) to
+    ``base_path/<dirs>/<name>``, then drop the staging root.
 
-    for row in manifest_rows:
-        dir_path = f"{base_path}/{row['encodedPartition']}"
-        chunk_dir = Path(f"{dir_path}/chunk={row['chunk']}")
-        target = Path(f"{dir_path}/{row['file_name']}")
-        if not fs.exists(chunk_dir):
-            continue
-        files = [
-            f.getPath()
-            for f in fs.listStatus(chunk_dir)
-            if f.getPath().getName().startswith("part-")
-        ]
-        if not files:
-            fs.delete(chunk_dir, True)
-            continue
-        if len(files) != 1:
+    Files from different writes in one ``file_name=`` directory are
+    replayed copies of one offset range: one is published. Several files
+    from one write are a split chunk: raise before renaming anything."""
+    staging = f"{base_path}/{STAGING}"
+    fs, Path = statedir.hadoop_fs(spark, staging)
+    pattern = "/".join([staging] + ["*"] * depth + [f"{NAME_DIR}*", "part-*"])
+    chunks: dict[str, list] = {}
+    for status in fs.globStatus(Path(pattern)) or []:
+        src = status.getPath()
+        chunks.setdefault(src.getParent().toString(), []).append(src)
+    for name_dir, files in chunks.items():
+        split = max(Counter(_write_id(f.getName()) for f in files).values())
+        if split > 1:
             raise RuntimeError(
-                f"chunk {chunk_dir} produced {len(files)} files; expected 1 "
-                "(repartition on chunk key violated?)"
+                f"chunk {name_dir} was split into {split} files by one "
+                "write; expected 1 (maxRecordsPerFile below flush.size?)"
             )
-        if fs.exists(target):
-            fs.delete(files[0], False)  # replay: identical content already committed
-        else:
+    made: set[str] = set()
+    for name_dir, files in chunks.items():
+        *dirs, name = name_dir.split("/")[-(depth + 1):]
+        parent = "/".join([base_path, *dirs])
+        if parent not in made:
+            fs.mkdirs(Path(parent))
+            made.add(parent)
+        target = Path(f"{parent}/{unquote(name[len(NAME_DIR):])}")
+        if not fs.exists(target):  # replay: identical content already committed
             fs.rename(files[0], target)
-        fs.delete(chunk_dir, True)
+    fs.delete(Path(staging), True)
 
 
 def read_committed(spark: SparkSession, cfg: HdfsSinkConfig, topic: str) -> DataFrame:

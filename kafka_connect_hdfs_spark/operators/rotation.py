@@ -101,6 +101,32 @@ def size_based_chunks(
     return out.drop("_rn", "_total")
 
 
+def chunk_file_name(
+    topic: str,
+    ext: str,
+    offset_col: str = "offset",
+    kafka_partition_col: str = "partition",
+    pad_width: int = 10,
+) -> Column:
+    """W6 on the records: the committed name of the chunk each row of a
+    ``size_based_chunks`` frame belongs to (start = min(offset), end =
+    max(offset) of its chunk). The min/max window keys on (kafkaPartition,
+    encodedPartition, chunk), which the chunk window's (kafkaPartition,
+    encodedPartition) hash partitioning already satisfies — no Exchange.
+    It is ``chunk_file_manifest``'s name, computed per record instead of per
+    aggregated chunk, so a file's name on disk equals its manifest row's.
+    """
+    w = Window.partitionBy(kafka_partition_col, "encodedPartition", "chunk")
+    return committed_file_name(
+        topic,
+        F.col(kafka_partition_col),
+        F.min(offset_col).over(w),
+        F.max(offset_col).over(w),
+        ext,
+        pad_width,
+    )
+
+
 def chunk_file_manifest(
     chunked: DataFrame,
     topic: str,

@@ -112,18 +112,97 @@ def _committed_sort_key(path: str):
     return (0, 0, os.path.getmtime(path), path)
 
 
+def _local_dir(path: str) -> str:
+    """The local directory behind ``path`` for the pure-Python Avro codec,
+    which writes through the local filesystem: a bare path or a
+    ``file://`` URL. Any other scheme (hdfs://, s3a://, ...) is refused
+    rather than silently written to local disk."""
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme == "":
+        return path
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        return url.path
+    raise ValueError(
+        f"the pure-Python avro writer only writes local paths; got {path!r}. "
+        "Install spark-avro to write other filesystems."
+    )
+
+
+def _avro_files(local: str) -> list[str]:
+    """The ``.avro`` files under ``local``, skipping ``_``- and
+    ``.``-prefixed directories as Spark's file index does (e.g. the
+    contract-naming staging root of an unfinished batch)."""
+    import glob as _glob
+    import os
+
+    return sorted(
+        fp
+        for fp in _glob.glob(os.path.join(local, "**", "*.avro"), recursive=True)
+        if not any(
+            seg.startswith("_") for seg in os.path.relpath(fp, local).split(os.sep)
+        )
+    )
+
+
+def _as_utc(dt):
+    """Fixer for decoded values of Spark type ``dt``, or None. The codec
+    decodes ``timestamp-micros`` to naive UTC datetimes, but
+    ``createDataFrame`` reads a naive datetime as local time: tag them UTC
+    so a write/read round trip holds in any worker timezone."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.TimestampType):
+        return lambda v: v if v is None else v.replace(tzinfo=datetime.timezone.utc)
+    if isinstance(dt, T.ArrayType):
+        item = _as_utc(dt.elementType)
+        return item and (lambda v: v if v is None else [item(x) for x in v])
+    return None
+
+
+def _times_as_ints(batch, keep: list[str]):
+    """``batch`` with its timestamp and date columns (other than ``keep``)
+    as the integer micros / days the Avro encoders write: converting them
+    to Python ``datetime`` objects costs more than encoding the rows."""
+    import pyarrow as pa
+
+    def plain(name, col):
+        if name in keep:
+            return col
+        if pa.types.is_timestamp(col.type):
+            return col.cast(pa.int64())
+        if pa.types.is_date32(col.type):
+            return col.cast(pa.int32())
+        return col
+
+    names = batch.schema.names
+    return pa.RecordBatch.from_arrays(
+        [plain(n, c) for n, c in zip(names, batch.columns)], names=names
+    )
+
+
 class PurePythonAvroSink(FormatSink):
     """O1/O5 without spark-avro: lands genuine Avro Object Container Files
     via the dependency-free codec in formats/avro_io.py (container spec:
     avro/AvroRecordWriterProvider.java:50-103; schema read-back:
     avro/AvroFileReader.java:42-53).
 
-    Files are written per Spark partition on the executors
-    (mapPartitionsWithIndex) — no driver collect. Hive-style partition dirs
-    are grouped within each task, mirroring the reference's one-writer-per
-    -encodedPartition layout (TopicPartitionWriter.getWriter). Every write
+    Files are written per Spark partition on the executors: ``mapInArrow``
+    hands each task Arrow batches, whose rows stream (across batch
+    boundaries) through the schema's compiled encoders — no driver collect,
+    no pickled ``Row``s. Each task returns one count row, collected by the
+    same job. Hive-style partition dirs are grouped within each task,
+    mirroring the reference's one-writer-per-encodedPartition layout
+    (TopicPartitionWriter.getWriter). Every container is written under a
+    hidden temporary name and renamed to its ``part-`` name once closed
+    (``avro_io.write_container``), so a killed task attempt leaves no
+    truncated file that a reader or a commit glob would see. Every write
     call stamps a fresh run id into its filenames, so appending a second
-    batch never overwrites committed files. Reads decode executor-side.
+    batch never overwrites committed files. Only local paths (bare or
+    ``file://``) are written. Reads decode executor-side.
 
     When the JVM ``avro`` datasource is present (real cluster), write/read
     delegate to it instead — same layout, codegen speed.
@@ -143,7 +222,7 @@ class PurePythonAvroSink(FormatSink):
         if jvm_avro_available(df.sparkSession):
             return FormatSink.write(self, df, path, partition_by, mode)
 
-        local = path.removeprefix("file://")
+        local = _local_dir(path)
         if mode == "overwrite" and os.path.isdir(local):
             for fp in _glob.glob(os.path.join(local, "**", "*.avro"), recursive=True):
                 os.remove(fp)
@@ -197,7 +276,6 @@ class PurePythonAvroSink(FormatSink):
                 type(df.schema)(payload_fields), name="spark_record"
             )
         pcols = list(partition_by)
-        names = [f.name for f in payload_fields]
         run_id = uuid.uuid4().hex[:8]  # unique per write call — appends never collide
 
         if pcols:
@@ -205,11 +283,19 @@ class PurePythonAvroSink(FormatSink):
                 *[F.col(c) for c in pcols]
             )
 
-        def to_datum(r):
-            return r["value"] if unwrap else {c: r[c] for c in names}
-
-        def write_part(idx, rows):
+        def write_part(batches):
             import itertools
+
+            import pyarrow as pa
+            from pyspark import TaskContext
+
+            name = f"part-{TaskContext.get().partitionId():05d}-{run_id}.avro"
+            # one group may span Arrow batches: stream rows, not batches
+            rows = (r for b in batches for r in _times_as_ints(b, pcols).to_pylist())
+
+            def data(rs):
+                # record rows pass as dicts: the encoder ignores partition keys
+                return (r["value"] for r in rs) if unwrap else rs
 
             n = 0
             if pcols:
@@ -221,30 +307,24 @@ class PurePythonAvroSink(FormatSink):
                     )
                     os.makedirs(d, exist_ok=True)
                     n += write_container(
-                        os.path.join(d, f"part-{idx:05d}-{run_id}.avro"),
-                        avro_schema,
-                        (to_datum(r) for r in group),
-                        codec=codec,
+                        os.path.join(d, name), avro_schema, data(group), codec=codec
                     )
             else:
                 os.makedirs(local, exist_ok=True)
                 n += write_container(
-                    os.path.join(local, f"part-{idx:05d}-{run_id}.avro"),
-                    avro_schema,
-                    (to_datum(r) for r in rows),
-                    codec=codec,
+                    os.path.join(local, name), avro_schema, data(rows), codec=codec
                 )
-            yield n
+            yield pa.RecordBatch.from_pydict({"n": [n]}, schema=pa.schema([("n", pa.int64())]))
 
         os.makedirs(local, exist_ok=True)
-        df.rdd.mapPartitionsWithIndex(write_part).sum()
+        df.mapInArrow(write_part, "n long").collect()
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
         """Distributed decode: the driver only globs file names and reads ONE
         container header for the schema; record decode runs executor-side
         (parallelized file list → per-file decode), so a 100 TB landing zone
-        never funnels through the driver."""
-        import glob as _glob
+        never funnels through the driver. Timestamps come back as the UTC
+        instants the writer encoded."""
         import os
 
         from kafka_connect_hdfs_spark.formats.avro_io import (
@@ -254,8 +334,8 @@ class PurePythonAvroSink(FormatSink):
         if jvm_avro_available(spark):
             return FormatSink.read(self, spark, path)
 
-        local = path.removeprefix("file://")
-        files = sorted(_glob.glob(os.path.join(local, "**", "*.avro"), recursive=True))
+        local = _local_dir(path)
+        files = _avro_files(local)
         if not files:
             raise FileNotFoundError(f"no .avro files under {path}")
         struct = avro_to_struct(read_schema(files[0]))
@@ -277,13 +357,20 @@ class PurePythonAvroSink(FormatSink):
         for c in sorted(part_keys - set(struct.fieldNames())):
             out_struct = out_struct.add(T.StructField(c, T.StringType(), True))
         field_names = out_struct.fieldNames()
+        fixers = [
+            (i, fix) for i, f in enumerate(out_struct.fields)
+            if (fix := _as_utc(f.dataType))
+        ]
 
         def decode(it):
             for fp, pvals in it:
                 _, recs = read_container(fp)
                 for r in recs:
                     merged = {**r, **pvals}
-                    yield tuple(merged.get(f) for f in field_names)
+                    row = [merged.get(f) for f in field_names]
+                    for i, fix in fixers:
+                        row[i] = fix(row[i])
+                    yield tuple(row)
 
         rdd = spark.sparkContext.parallelize(
             tasks, max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
@@ -295,9 +382,6 @@ class PurePythonAvroSink(FormatSink):
         OFFSET (FileUtils.fileStatusWithMaxOffset, TopicPartitionWriter.java
         :334-350) — contract-named files sort by end offset; mtime is only
         the fallback for non-contract names. Header-only read."""
-        import glob as _glob
-        import os
-
         from kafka_connect_hdfs_spark.formats.avro_io import (
             avro_to_struct, read_schema,
         )
@@ -305,11 +389,7 @@ class PurePythonAvroSink(FormatSink):
         if jvm_avro_available(spark):
             return FormatSink.schema_of(self, spark, path)
 
-        local = path.removeprefix("file://")
-        files = sorted(
-            _glob.glob(os.path.join(local, "**", "*.avro"), recursive=True),
-            key=_committed_sort_key,
-        )
+        files = sorted(_avro_files(_local_dir(path)), key=_committed_sort_key)
         return avro_to_struct(read_schema(files[-1]))
 
 

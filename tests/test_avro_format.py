@@ -59,6 +59,68 @@ def test_container_roundtrip_all_types(tmp_path, codec):
     assert got[0]["arr"] == [1.5, -2.25]
     assert got[1]["i"] == -42
 
+    # every Spark type the sink maps (_avro_type), non-null and nullable:
+    # the compiled encoders write exactly _encode_value's bytes
+    import decimal
+
+    from pyspark.sql import types as T
+
+    from kafka_connect_hdfs_spark.formats.avro_io import _encode_value, compile_encoder
+
+    utc = datetime.timezone.utc
+    plus2 = datetime.timezone(datetime.timedelta(hours=2))
+    values = {
+        "bigint": (T.LongType(), [0, -1, 63, -64, 64, 2**63 - 1, -(2**63)]),
+        "int": (T.IntegerType(), [0, 7, -2**31, 2**31 - 1]),
+        "smallint": (T.ShortType(), [-300, 300]),
+        "tinyint": (T.ByteType(), [-128, 127]),
+        "double": (T.DoubleType(), [0.0, -0.125, 1e300, float("inf")]),
+        "float": (T.FloatType(), [1.5, -2.25, 2.0**100]),
+        "string": (T.StringType(), ["", "héllo", "x" * 200]),
+        "boolean": (T.BooleanType(), [True, False]),
+        "binary": (T.BinaryType(), [b"", b"\x00\xff", bytearray(b"ab")]),
+        "ts_naive": (T.TimestampType(), [datetime.datetime(2001, 2, 3, 4, 5, 6, 789001),
+                                         datetime.datetime(1969, 12, 31, 23, 59, 59, 999999)]),
+        "ts_aware": (T.TimestampType(), [datetime.datetime(2001, 2, 3, 4, 5, 6, 1, tzinfo=utc),
+                                         datetime.datetime(2001, 2, 3, 6, 5, 6, 1, tzinfo=plus2)]),
+        "ts_ntz": (T.TimestampNTZType(), [datetime.datetime(2262, 1, 1, 0, 0, 0, 1)]),
+        "date": (T.DateType(), [datetime.date(1970, 1, 1), datetime.date(1900, 3, 1),
+                                datetime.date(9999, 12, 31)]),
+        "decimal": (T.DecimalType(18, 2), [decimal.Decimal("1234567890123456.78"),
+                                           decimal.Decimal("-0.01"), decimal.Decimal("0.00")]),
+        "decimal38": (T.DecimalType(38, 0), [decimal.Decimal(10) ** 20, decimal.Decimal(-128)]),
+        "array": (T.ArrayType(T.IntegerType()), [[], [1, -2, 3], list(range(130))]),
+        "array_str": (T.ArrayType(T.StringType()), [["a", ""], []]),
+    }
+    struct = T.StructType(
+        [T.StructField(k, dt, False) for k, (dt, _) in values.items()]
+        + [T.StructField(f"{k}_n", dt, True) for k, (dt, _) in values.items()]
+    )
+    typed = struct_to_avro_schema(struct, name="typed")
+    for f in typed["fields"]:
+        enc = compile_encoder(f["type"])
+        vals = values[f["name"].removesuffix("_n")][1]
+        for v in vals + ([None] if f["name"].endswith("_n") else []):
+            ref = io.BytesIO()
+            _encode_value(ref, f["type"], v)
+            assert enc(v) == ref.getvalue(), (f["name"], v)
+    def pick(f, i):
+        vals = values[f.name.removesuffix("_n")][1]
+        return vals[i % len(vals)]
+
+    typed_rows = [{f.name: pick(f, i) for f in struct.fields} for i in range(3)]
+    typed_rows.append({f.name: None if f.nullable else pick(f, 0) for f in struct.fields})
+    tp = str(tmp_path / "typed.avro")
+    assert write_container(tp, typed, iter(typed_rows), codec=codec) == 4
+    _, back = read_container(tp)
+    for want, have in zip(typed_rows, back):
+        for k, v in want.items():
+            if isinstance(v, datetime.datetime) and v.tzinfo is not None:
+                v = v.astimezone(utc).replace(tzinfo=None)  # decoded as naive UTC
+            if isinstance(v, bytearray):
+                v = bytes(v)
+            assert have[k] == v, (k, v, have[k])
+
 
 def test_spark_partitioned_write_and_readback(spark, sf_dir, tmp_path):
     from kafka_connect_hdfs_spark.session import load_table
@@ -351,3 +413,159 @@ class TestPropertyRoundtrip:
             assert back == rows
 
         run()
+
+
+def test_killed_writer_leaves_no_visible_container(tmp_path):
+    """A writer killed mid-container leaves only a hidden temporary file:
+    nothing a reader's ``*.avro`` glob or the contract publish's ``part-*``
+    glob would pick up. A completed container keeps the sync marker of its
+    final path."""
+    import glob
+    import hashlib
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    import kafka_connect_hdfs_spark
+
+    final = tmp_path / "part-00000-run.avro"
+    script = textwrap.dedent(f"""
+        import os
+        from kafka_connect_hdfs_spark.formats.avro_io import write_container
+
+        def rows():
+            for i in range(5000):
+                if i == 2500:
+                    os._exit(9)  # killed mid-write: no cleanup runs
+                yield {{"i": i}}
+
+        schema = {{"type": "record", "name": "r", "fields": [{{"name": "i", "type": "long"}}]}}
+        write_container({str(final)!r}, schema, rows(), block_records=100)
+    """)
+    root = os.path.dirname(os.path.dirname(kafka_connect_hdfs_spark.__file__))
+    env = {**os.environ, "PYTHONPATH": root}
+    assert subprocess.run([sys.executable, "-c", script], env=env).returncode == 9
+    assert not final.exists()
+    assert glob.glob(f"{tmp_path}/*.avro") == []
+    assert glob.glob(f"{tmp_path}/part-*") == []
+    assert len(os.listdir(tmp_path)) == 1  # the hidden temporary file
+
+    schema = {"type": "record", "name": "r", "fields": [{"name": "i", "type": "long"}]}
+    assert write_container(str(final), schema, iter([{"i": 1}])) == 1
+    data = final.read_bytes()
+    assert data[-16:] == hashlib.md5(str(final).encode()).digest()
+    with pytest.raises(KeyError):  # an encoding error removes the temporary file
+        write_container(str(tmp_path / "part-1.avro"), schema, iter([{"j": 1}]))
+    assert not (tmp_path / "part-1.avro").exists()
+    assert len(os.listdir(tmp_path)) == 2
+
+
+def test_avro_write_refuses_non_local_schemes(spark, tmp_path, monkeypatch):
+    """The pure-Python writer writes through the local filesystem only: a
+    remote URL must fail, never land on local disk under a mangled path."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    sink = PurePythonAvroSink("avro", ".avro", {})
+    df = spark.createDataFrame([Row(v=1)])
+    for url in ("hdfs://namenode:8020/topics/t", "s3a://bucket/topics/t",
+                "file://otherhost/topics/t"):
+        with pytest.raises(ValueError, match="local paths"):
+            sink.write(df, url, [])
+    assert os.listdir(tmp_path) == []
+    sink.write(df, f"file://{tmp_path}/ok", [])
+    sink.write(df, f"{tmp_path}/ok", [])
+    assert sink.read(spark, f"file://{tmp_path}/ok").count() == 2
+
+
+def test_sink_write_arrow_roundtrip_typed_columns(spark, tmp_path):
+    """``sink.write`` through ``mapInArrow``: decimal, date, array and
+    timestamp columns round-trip, and a partition-dir group longer than one
+    Arrow batch streams into ONE container per (task, directory). The
+    timestamps are UTC instants, so the check holds in any host timezone."""
+    import decimal
+    import glob
+
+    utc = datetime.timezone.utc
+    rows = [
+        Row(g=i % 2, amount=decimal.Decimal(i) / 4, day=datetime.date(2020, 1, 1 + i % 28),
+            tags=[i, -i] if i % 3 else [],
+            ts=datetime.datetime(2021, 5, 6, 7, 8, 9, i, tzinfo=utc),
+            note=None if i % 5 == 0 else f"n{i}")
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(
+        rows, "g int, amount decimal(10,2), day date, tags array<int>, "
+              "ts timestamp, note string",
+    ).coalesce(1)
+    out = f"{tmp_path}/typed"
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        PurePythonAvroSink("avro", ".avro", {}).write(df, out, ["g"])
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    files = glob.glob(f"{out}/g=*/*.avro")
+    assert sorted(f.split("/")[-2] for f in files) == ["g=0", "g=1"]
+    got = {}
+    for fp in files:
+        g = int(fp.split("/")[-2][2:])
+        for r in read_container(fp)[1]:
+            got[(g, r["ts"])] = r
+    assert len(got) == 60
+    for r in rows:
+        have = got[(r.g, r.ts.replace(tzinfo=None))]  # decoded as naive UTC
+        assert (have["amount"], have["day"], have["tags"], have["note"]) == (
+            r.amount, r.day, r.tags, r.note)
+
+
+def test_avro_timestamps_roundtrip_in_non_utc_timezone(tmp_path):
+    """With the driver, JVM and Python workers in a non-UTC zone, the sink
+    writes true UTC micros (Avro ``timestamp-micros``) and ``read`` gives
+    back the same instants — top-level and inside arrays."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    import kafka_connect_hdfs_spark
+
+    script = textwrap.dedent(f"""
+        import datetime
+        import glob
+
+        from pyspark.sql import SparkSession
+
+        from kafka_connect_hdfs_spark.formats.avro_io import read_container
+        from kafka_connect_hdfs_spark.sinks import PurePythonAvroSink
+
+        assert datetime.datetime.now().astimezone().utcoffset()
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false")
+                 .config("spark.driver.memory", "512m").getOrCreate())
+        spark.sparkContext.setLogLevel("ERROR")
+        local = [datetime.datetime(2021, 5, 6, 7, 8, 9, 10),
+                 datetime.datetime(1999, 12, 31, 23, 59, 59)]
+        df = spark.createDataFrame(
+            [(i, t, [t]) for i, t in enumerate(local)],
+            "i int, ts timestamp, tss array<timestamp>",
+        ).coalesce(1)
+        out = {str(tmp_path / "tz")!r}
+        sink = PurePythonAvroSink("avro", ".avro", {{}})
+        sink.write(df, out, [])
+        utc = [t.astimezone(datetime.timezone.utc).replace(tzinfo=None) for t in local]
+        (fp,) = glob.glob(out + "/*.avro")
+        raw = sorted(read_container(fp)[1], key=lambda r: r["i"])
+        assert [(r["ts"], r["tss"]) for r in raw] == [(u, [u]) for u in utc], raw
+        back = sink.read(spark, out).orderBy("i").collect()
+        assert [(r.ts, r.tss) for r in back] == [(t, [t]) for t in local], back
+        spark.stop()
+        print("roundtrip ok")
+    """)
+    root = os.path.dirname(os.path.dirname(kafka_connect_hdfs_spark.__file__))
+    env = {**os.environ, "PYTHONPATH": root, "TZ": "Asia/Kolkata"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True, text=True
+    )
+    assert run.returncode == 0 and "roundtrip ok" in run.stdout, run.stderr[-3000:]

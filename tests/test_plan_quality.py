@@ -74,6 +74,12 @@ def test_ingest_single_shuffle(spark, sf):
     # one Exchange for the (partition, encodedPartition) window; the count
     # filter reuses it
     assert plan.count("Exchange") <= 2, plan
+    # the per-record committed name (min/max over the chunk) rides on the
+    # same partitioning: no Exchange of its own
+    from kafka_connect_hdfs_spark.operators.rotation import chunk_file_name
+
+    named = _plan(res.data.withColumn("file_name", chunk_file_name("events", ".parquet")))
+    assert named.count("Exchange") == plan.count("Exchange"), named
 
 
 def test_minhash_signatures_shuffle_free(spark, sf):
