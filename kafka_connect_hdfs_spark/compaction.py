@@ -8,8 +8,9 @@ files dominates, so compaction is a first-class maintenance operator:
 
   - groups landed files per partition directory,
   - rewrites each directory to ceil(bytes / target) files,
-  - atomically swaps via write-to-temp + directory rename (same
-    temp-then-rename discipline as F5).
+  - atomically swaps via write-to-temp + :func:`statedir.publish_dir`
+    (the package's one two-rename publish); a crash mid-swap is healed
+    by the next call, which restores stranded backups on entry.
 
 Scale: one job per compaction run; within the job each partition dir is an
 independent task group (no cross-dir shuffle — ``repartition`` happens
@@ -20,7 +21,8 @@ reference's Hive-sync pattern: maintenance decoupled from the hot path).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from kafka_connect_hdfs_spark import statedir
 
 
 def compact_partitions(
@@ -34,43 +36,23 @@ def compact_partitions(
 
     Returns {relative_dir: (files_before, files_after)} for dirs rewritten.
     Uses Hadoop FS listing (works on hdfs:// and file:// alike) and the
-    atomic-rename swap; readers either see the old file set or the new one.
+    :func:`statedir.publish_dir` swap; readers either see the old file
+    set or the new one. A crash mid-swap leaves the leaf in its hidden
+    ``.<leaf>__compact_old`` backup, and the next call restores it on
+    entry (the listing walk) before compacting again.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, Path = statedir.hadoop_fs(spark, table_path)
     root = Path(table_path)
-    fs = root.getFileSystem(conf)
-
-    # find leaf dirs containing data files
-    leaves: list[tuple[str, list, int]] = []
-
-    def walk(p):
-        entries = list(fs.listStatus(p))
-        subdirs = [
-            e for e in entries
-            if e.isDirectory() and not e.getPath().getName().startswith(("_", "."))
-        ]
-        files = [
-            e for e in entries
-            if e.isFile() and not e.getPath().getName().startswith(("_", "."))
-        ]
-        if files and not subdirs:
-            leaves.append(
-                (p.toString(), files, sum(e.getLen() for e in files))
-            )
-        for d in subdirs:
-            walk(d.getPath())
-
-    walk(root)
+    leaves = _walk_leaves(fs, Path, root, restore_suffix="__compact_old")
 
     # listStatus returns scheme-qualified paths (file:/...); qualify the
     # base the same way or the relative-slice cuts mid-string
     base_str = fs.makeQualified(root).toString().rstrip("/")
     todo = []
-    for dir_str, files, total_bytes in leaves:
+    for dir_str, files in leaves:
         if len(files) < min_files_to_compact:
             continue
+        total_bytes = sum(e.getLen() for e in files)
         n_target = max(1, -(-total_bytes // target_file_bytes))  # ceil
         if n_target >= len(files):
             continue
@@ -84,20 +66,15 @@ def compact_partitions(
         # Spark partition discovery) so readers never see a half-built dir
         parent, leaf = dir_str.rsplit("/", 1)
         tmp_dir = f"{parent}/.{leaf}__compact_tmp"
-        old_dir = f"{parent}/.{leaf}__compact_old"
         fs.delete(Path(tmp_dir), True)  # clear any crashed prior attempt
-        fs.delete(Path(old_dir), True)
         df.repartition(n_target).write.format(fmt).mode("overwrite").save(tmp_dir)
         n_new = sum(
             1 for e in fs.listStatus(Path(tmp_dir))
             if e.isFile() and not e.getPath().getName().startswith(("_", "."))
         )
-        # atomic swap via two directory renames: readers see the old file set
-        # or the new one; a crash in between leaves the data intact in
-        # old_dir (recoverable), never a partially-deleted live dir
-        fs.rename(Path(dir_str), Path(old_dir))
-        fs.rename(Path(tmp_dir), Path(dir_str))
-        fs.delete(Path(old_dir), True)
+        statedir.publish_dir(
+            fs, Path, dir_str, tmp_dir, f"{parent}/.{leaf}__compact_old"
+        )
         return rel, (len(files), n_new)
 
     # leaf dirs rewrite independently (disjoint inputs/outputs, per-dir
@@ -123,20 +100,44 @@ def _maybe_rebalance(df, cols: "list[str]"):
     oversized key (guide §2.5/§6). The split count comes from the planned
     scan — no job runs — so the condition self-adapts with input size:
     at 100 TB every relayout slice is many splits and the hint always
-    fires."""
+    fires.
+
+    Contract: ``df`` must be a bare file scan (``spark.read...load``).
+    With AQE on, ``.rdd`` on a plan that contains an exchange
+    materializes the upstream stages just to count partitions. Both
+    callers pass the scan itself, so nothing checks this at run time."""
     if df.rdd.getNumPartitions() <= 1:
         return df
     return df.hint("rebalance", *cols)
 
 
-def _walk_leaves(fs, root) -> "list[tuple[str, list]]":
+def _walk_leaves(
+    fs, Path, root, restore_suffix: "str | None" = None
+) -> "list[tuple[str, list]]":
     """All leaf data directories under ``root`` as ``(abs_path, files)``
     (a dir with files and no visible subdirs; hidden ``_``/``.`` entries
-    ignored, matching Spark's discovery)."""
+    ignored, matching Spark's discovery). With ``restore_suffix``, every
+    directory on the way first gets the :func:`statedir.restore_backups`
+    decision for its ``.<leaf><restore_suffix>`` backups (the root's
+    own backup sits beside it) — the entry recovery of the per-leaf
+    swaps, at any depth, for no extra listing unless a backup is
+    actually there."""
     leaves: "list[tuple[str, list]]" = []
+    if restore_suffix is not None:
+        # an unpartitioned table is its own (only) leaf
+        statedir.restore_backup(
+            fs, Path, root.toString(),
+            f"{root.getParent().toString()}/.{root.getName()}{restore_suffix}",
+        )
 
     def walk(p):
         entries = list(fs.listStatus(p))
+        if restore_suffix is not None and any(
+            statedir.backup_leaf(e.getPath().getName(), restore_suffix)
+            for e in entries
+        ):
+            statedir.restore_backups(fs, Path, p.toString(), restore_suffix)
+            entries = list(fs.listStatus(p))
         subdirs = [
             e for e in entries
             if e.isDirectory() and not e.getPath().getName().startswith(("_", "."))
@@ -172,10 +173,12 @@ def relayout_partitions(
 
     Mechanics: one read of the current table (partition columns
     recovered from the directory structure by Spark's discovery), one
-    partitioned write to a hidden sibling, then the same crash-
-    recoverable two-rename swap as :func:`compact_partitions` — readers
-    see the old tree or the new one, never a mix; a crash between
-    renames leaves the data intact in the ``.__relayout_old`` sibling.
+    partitioned write to a hidden sibling, then the same
+    :func:`statedir.publish_dir` swap as :func:`compact_partitions` —
+    readers see the old tree or the new one, never a mix; a crash
+    between renames leaves the data intact in the
+    ``.<table>__relayout_old`` sibling, and the next call restores it
+    on entry.
 
     Returns ``{new_leaf_dir: n_files}`` for the rewritten tree.
 
@@ -189,10 +192,11 @@ def relayout_partitions(
     per-leaf done marker commits it — re-running a completed leaf is a
     no-op. The LIVE table is untouched (readers see the old layout,
     every file inode-identical) until the call that completes the LAST
-    old leaf, which performs the same two-rename atomic swap as the
-    global mode (with roll-forward recovery if a crash lands between
-    the renames). Mid-sequence calls return ``{}``; the completing call
-    returns the new tree's ``{new_leaf_dir: n_files}``. A 100 TB
+    old leaf, which performs the same :func:`statedir.publish_dir` swap
+    as the global mode (if a crash lands between the renames, the next
+    call rolls the cutover forward on entry). Mid-sequence calls return
+    ``{}``; the completing call returns the new tree's
+    ``{new_leaf_dir: n_files}``. A 100 TB
     relayout restarts per-dir instead of wasting the whole job.
 
     Scale: the rewrite is ONE shuffle on the new partition key (the
@@ -204,8 +208,6 @@ def relayout_partitions(
     ``basePath``, so the relayed rows are byte-equal to a global
     rewrite's.
     """
-    from kafka_connect_hdfs_spark import statedir
-
     # module-attribute call: the chaos kill-point sweep monkeypatches
     # statedir.hadoop_fs to inject a mutation-counting fs proxy
     fs, Path = statedir.hadoop_fs(spark, table_path)
@@ -216,6 +218,11 @@ def relayout_partitions(
             spark, fs, Path, table_path, new_partition_cols, fmt, scope
         )
 
+    live_str = table_path.rstrip("/")
+    parent, leaf = live_str.rsplit("/", 1)
+    tmp_dir = f"{parent}/.{leaf}__relayout_tmp"
+    old_dir = f"{parent}/.{leaf}__relayout_old"
+    statedir.restore_backup(fs, Path, live_str, old_dir)
     if not fs.exists(root):
         raise FileNotFoundError(table_path)
 
@@ -226,11 +233,7 @@ def relayout_partitions(
             f"new partition columns {missing} not in table columns "
             f"{df.columns}"
         )
-    parent, leaf = table_path.rstrip("/").rsplit("/", 1)
-    tmp_dir = f"{parent}/.{leaf}__relayout_tmp"
-    old_dir = f"{parent}/.{leaf}__relayout_old"
     fs.delete(Path(tmp_dir), True)
-    fs.delete(Path(old_dir), True)
     (
         # cluster rows by the new partition key before the partitioned
         # write (the "ONE shuffle" the contract describes): without it
@@ -247,37 +250,19 @@ def relayout_partitions(
         .mode("overwrite")
         .save(tmp_dir)
     )
-    if not fs.rename(Path(table_path.rstrip("/")), Path(old_dir)):
-        raise IOError(f"relayout swap-out rename failed for {table_path}")
-    if not fs.rename(Path(tmp_dir), Path(table_path.rstrip("/"))):
-        # restore the original tree before surfacing the failure
-        fs.rename(Path(old_dir), Path(table_path.rstrip("/")))
-        raise IOError(f"relayout swap-in rename failed for {table_path}")
-    fs.delete(Path(old_dir), True)
+    statedir.publish_dir(fs, Path, live_str, tmp_dir, old_dir)
+    return _leaf_file_counts(fs, Path, root)
 
-    out: "dict[str, int]" = {}
+
+def _leaf_file_counts(fs, Path, root) -> "dict[str, int]":
+    """``{leaf_dir relative to root: n_files}`` of a published tree."""
     # listStatus returns scheme-qualified paths (file:/...); qualify the
     # base the same way or the relative-slice cuts mid-string
-    base_str = fs.makeQualified(root).toString().rstrip("/")
-
-    def walk(p):
-        entries = list(fs.listStatus(p))
-        subdirs = [
-            e for e in entries
-            if e.isDirectory() and not e.getPath().getName().startswith(("_", "."))
-        ]
-        files = [
-            e for e in entries
-            if e.isFile() and not e.getPath().getName().startswith(("_", "."))
-        ]
-        if files and not subdirs:
-            rel = p.toString()[len(base_str):].lstrip("/")
-            out[rel] = len(files)
-        for d in subdirs:
-            walk(d.getPath())
-
-    walk(root)
-    return out
+    base_q = fs.makeQualified(root).toString().rstrip("/")
+    return {
+        dir_str[len(base_q):].lstrip("/"): len(files)
+        for dir_str, files in _walk_leaves(fs, Path, root)
+    }
 
 
 _DONE_PREFIX = "_relayout_done_"
@@ -318,30 +303,21 @@ def _relayout_scoped(
             if e.isFile() and e.getPath().getName().startswith(_DONE_PREFIX):
                 fs.delete(e.getPath(), False)
 
-    # crash recovery for the FINAL swap: roll forward (stage was complete
-    # — finish the cutover), or finish the cleanup of a swap that landed
-    if not fs.exists(live):
-        if fs.exists(stage):
-            # mid-sequence the live dir is never renamed, so live-missing
-            # + stage-present is exactly the final-swap crash window and
-            # the stage is complete: finish the cutover and return it
-            if not fs.rename(stage, live):
-                raise IOError(f"relayout roll-forward failed for {live_str}")
-            fs.delete(Path(old_str), True)
-            _sweep_markers(live_str)
-            base_q = fs.makeQualified(live).toString().rstrip("/")
-            return {
-                dir_str[len(base_q):].lstrip("/"): len(files)
-                for dir_str, files in _walk_leaves(fs, live)
-            }
-        elif fs.exists(Path(old_str)):
-            if not fs.rename(Path(old_str), live):
-                raise IOError(f"relayout restore failed for {live_str}")
-        else:
-            raise FileNotFoundError(table_path)
-    elif fs.exists(Path(old_str)) and not fs.exists(stage):
-        fs.delete(Path(old_str), True)  # swap landed; cleanup crashed
+    # crash recovery for the FINAL swap. Mid-sequence the live dir is
+    # never renamed, so live-missing + stage-present is exactly the
+    # cutover's crash window and the stage is complete: roll forward
+    if not fs.exists(live) and fs.exists(stage):
+        if not fs.rename(stage, live):
+            raise IOError(f"relayout roll-forward failed for {live_str}")
+        fs.delete(Path(old_str), True)
         _sweep_markers(live_str)
+        return _leaf_file_counts(fs, Path, live)
+    if not fs.exists(stage):
+        # no sequence in flight: restore a backup stranded by a crashed
+        # cutover, or drop one whose cutover landed
+        statedir.restore_backup(fs, Path, live_str, old_str)
+    if not fs.exists(live):
+        raise FileNotFoundError(table_path)
 
     # fresh sequence: sweep stale done markers a crashed FINAL cleanup of
     # a PREVIOUS sequence may have left in the live root (same rel names
@@ -359,7 +335,7 @@ def _relayout_scoped(
     base_q = fs.makeQualified(live).toString().rstrip("/")
     live_leaves = {
         (p[len(base_q):].lstrip("/") if p != base_q else ""): files
-        for p, files in _walk_leaves(fs, live)
+        for p, files in _walk_leaves(fs, Path, live)
     }
     unknown = [rel for rel in scope if rel.rstrip("/") not in live_leaves]
     if unknown:
@@ -374,7 +350,7 @@ def _relayout_scoped(
         if fs.exists(marker):
             continue  # restart: this leaf already committed
         # purge files of a crashed half-moved attempt of THIS leaf
-        for _dir, files in _walk_leaves(fs, stage):
+        for _dir, files in _walk_leaves(fs, Path, stage):
             for e in files:
                 if e.getPath().getName().startswith(f"p{reg}_"):
                     fs.delete(e.getPath(), False)
@@ -406,7 +382,7 @@ def _relayout_scoped(
         # move the slice's files into the cumulative stage tree under the
         # per-leaf prefix; dir-level merge is append-only renames
         tmp_q = fs.makeQualified(Path(tmp_str)).toString().rstrip("/")
-        for dir_str, files in _walk_leaves(fs, Path(tmp_str)):
+        for dir_str, files in _walk_leaves(fs, Path, Path(tmp_str)):
             nrel = dir_str[len(tmp_q):].lstrip("/")
             dest = stage_str if nrel == "" else f"{stage_str}/{nrel}"
             fs.mkdirs(Path(dest))
@@ -431,18 +407,8 @@ def _relayout_scoped(
     ):
         return {}  # mid-sequence or leafless: live table untouched
 
-    # every old leaf is staged: atomic cutover (two renames, recoverable
-    # by the roll-forward block above), then marker cleanup
-    if not fs.rename(live, Path(old_str)):
-        raise IOError(f"relayout swap-out rename failed for {table_path}")
-    if not fs.rename(stage, live):
-        fs.rename(Path(old_str), live)  # restore and surface
-        raise IOError(f"relayout swap-in rename failed for {table_path}")
-    fs.delete(Path(old_str), True)
+    # every old leaf is staged: atomic cutover (recoverable by the
+    # roll-forward block above), then marker cleanup
+    statedir.publish_dir(fs, Path, live_str, stage_str, old_str)
     _sweep_markers(live_str)
-
-    out: "dict[str, int]" = {}
-    for dir_str, files in _walk_leaves(fs, live):
-        rel = dir_str[len(base_q):].lstrip("/")
-        out[rel] = len(files)
-    return out
+    return _leaf_file_counts(fs, Path, live)

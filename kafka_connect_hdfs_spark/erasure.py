@@ -10,10 +10,11 @@ proportional to the data that actually contains the keys:
      the affected set shrinks to a handful of files),
   2. rewrite ONLY the leaf directories holding affected files, minus the
      keys,
-  3. swap each rewritten directory with the same hidden-sibling
-     double-rename discipline as :mod:`.compaction` — readers see the old
-     file set or the new one; a crash leaves the originals recoverable in
-     the ``__erase_old`` sibling, never a half-deleted live dir.
+  3. swap each rewritten directory in with :func:`statedir.publish_dir`,
+     like :mod:`.compaction` — readers see the old file set or the new
+     one; a crash leaves the originals in the ``.<leaf>__erase_old``
+     sibling, never a half-deleted live dir, and the next call restores
+     them on entry before it locates keys.
 
 Directories without a single affected row are never read, written, or
 renamed — their files stay byte-identical (same inode, same mtime).
@@ -29,6 +30,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_connect_hdfs_spark import statedir
+from kafka_connect_hdfs_spark.compaction import _walk_leaves
+
 
 def erase_keys(
     spark: SparkSession,
@@ -43,13 +47,12 @@ def erase_keys(
     is itself large.
 
     Returns ``{"n_dirs_total", "n_dirs_rewritten", "n_rows_erased"}``.
-    Re-running after a crash converges: already-swapped dirs contain no
-    keys and are not selected again.
+    Re-running after a crash converges: the call first restores any
+    directory stranded in its backup, and already-swapped dirs contain
+    no keys and are not selected again.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(table_path).getFileSystem(conf)
+    fs, Path = statedir.hadoop_fs(spark, table_path)
+    _walk_leaves(fs, Path, Path(table_path), restore_suffix="__erase_old")
 
     df = spark.read.format(fmt).load(table_path)
     if isinstance(keys, DataFrame):
@@ -84,14 +87,12 @@ def erase_keys(
         n_before = local.count()
         parent, leaf = dir_str.rsplit("/", 1)
         tmp_dir = f"{parent}/.{leaf}__erase_tmp"
-        old_dir = f"{parent}/.{leaf}__erase_old"
         fs.delete(Path(tmp_dir), True)
-        fs.delete(Path(old_dir), True)
         keep.write.format(fmt).mode("overwrite").save(tmp_dir)
         n_after = spark.read.format(fmt).load(tmp_dir).count()
-        fs.rename(Path(dir_str), Path(old_dir))
-        fs.rename(Path(tmp_dir), Path(dir_str))
-        fs.delete(Path(old_dir), True)
+        statedir.publish_dir(
+            fs, Path, dir_str, tmp_dir, f"{parent}/.{leaf}__erase_old"
+        )
         n_erased += n_before - n_after
 
     return {

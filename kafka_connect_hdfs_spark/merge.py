@@ -14,10 +14,9 @@ Execution shape (Spark-first, 100 TB-ready):
      they are never opened), existing rows of updated keys drop via a
      broadcast anti-join, and the update batch unions in.
   2. The driver then swaps each staged partition directory into place
-     with the same hidden-sibling double-rename discipline as
-     :mod:`.compaction` and :mod:`.erasure` — metadata-only renames,
-     readers see old or new, a crash leaves originals recoverable and
-     re-running converges: step 1 of the next run restores any
+     with :func:`statedir.publish_dir`, like :mod:`.compaction` and
+     :mod:`.erasure` — metadata-only renames, readers see old or new,
+     and re-running converges: the next run first restores any
      ``.<leaf>__merge_old`` backup whose live dir is missing (a crash
      inside the two-rename window) before reading the table.
 
@@ -31,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kafka_connect_hdfs_spark import statedir
 
 
 def merge_upsert(
@@ -49,27 +50,14 @@ def merge_upsert(
     explicitly). Returns
     ``{"n_partitions_touched", "n_update_rows", "n_rows_after_affected"}``.
     """
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
 
-    # Crash recovery from a prior interrupted merge: a leftover
-    # .<leaf>__merge_old backup means the previous run died mid-swap.
-    # If its live sibling is missing, the crash hit between rename(live→old)
-    # and rename(staged→live) — restore the backup BEFORE computing the
-    # merged state (merging against a table missing that partition and then
-    # deleting the backup would permanently lose its non-updated rows:
-    # unlike wap.py, the staged content here derives from the live table).
-    # If the live dir exists, the backup is stale post-swap residue — drop.
-    suffix = "__merge_old"
-    for st in fs.listStatus(Path(table_path)):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(".") and name.endswith(suffix):
-            live_p = Path(f"{table_path}/{name[1:-len(suffix)]}")
-            if not fs.exists(live_p):
-                fs.rename(st.getPath(), live_p)
-            else:
-                fs.delete(st.getPath(), True)
+    # Crash recovery from a prior interrupted merge: restore every
+    # .<leaf>__merge_old backup stranded mid-swap BEFORE computing the
+    # merged state (merging against a table missing that partition and
+    # then deleting the backup would permanently lose its non-updated
+    # rows: the staged content here derives from the live table).
+    statedir.restore_backups(fs, Path, table_path, "__merge_old")
 
     # one pass over updates yields the touched partitions AND the row
     # count (was a distinct-collect plus a second full count() scan)
@@ -102,18 +90,10 @@ def merge_upsert(
         if st.isDirectory() and st.getPath().getName().startswith(prefix)
     ]
     for leaf in staged_leaves:
-        live = f"{table_path}/{leaf}"
-        old = f"{table_path}/.{leaf}__merge_old"
-        fs.delete(Path(old), True)
-        # rename() returns False on failure rather than raising; a
-        # swallowed failure here would let the trailing deletes destroy
-        # BOTH the pre-merge partition and the staged data (r09 ADVICE)
-        if fs.exists(Path(live)) and not fs.rename(Path(live), Path(old)):
-            raise IOError(f"merge swap-out rename failed for {leaf}")
-        if not fs.rename(Path(f"{staging}/{leaf}"), Path(live)):
-            fs.rename(Path(old), Path(live))
-            raise IOError(f"merge swap-in rename failed for {leaf}")
-        fs.delete(Path(old), True)
+        statedir.publish_dir(
+            fs, Path, f"{table_path}/{leaf}", f"{staging}/{leaf}",
+            f"{table_path}/.{leaf}__merge_old",
+        )
     fs.delete(Path(staging), True)
 
     return {
@@ -232,8 +212,9 @@ def merge_keyed(
       2. STAGE: one job writes the post-merge state of every touched
          partition (current rows minus updated keys, union the update
          rows) into a hidden staging tree.
-      3. SWAP: each staged leaf swaps in via the same two-rename
-         crash-recoverable protocol as :func:`merge_upsert`; leaves
+      3. SWAP: each staged leaf swaps in via :func:`statedir.publish_dir`,
+         and the next call restores a crashed swap on entry, as in
+         :func:`merge_upsert`; leaves
          EMPTIED by the merge roll forward through a
          ``.<leaf>__merge_dropped`` rename-then-delete. Untouched
          partitions are never read, written, or renamed
@@ -242,30 +223,19 @@ def merge_keyed(
     Returns ``{"n_partitions_touched", "n_update_rows",
     "n_rows_after_affected", "n_partitions_dropped"}``.
     """
-    from kafka_connect_hdfs_spark import statedir
-
     jvm = spark._jvm
     # module-attribute call: the chaos kill-point sweep monkeypatches
     # statedir.hadoop_fs to inject a mutation-counting fs proxy
     fs, Path = statedir.hadoop_fs(spark, table_path)
 
-    # crash recovery (same contract as merge_upsert): an __merge_old
-    # backup with no live sibling is a crash inside the two-rename window
-    # (restore it); with a live sibling it is post-swap residue (drop).
-    # An __merge_dropped backup is a partition-drop that crashed before
-    # its final delete — the merge that created it already decided the
-    # partition is gone, so completing the delete is the roll-forward.
+    # crash recovery (same contract as merge_upsert) for __merge_old
+    # backups. An __merge_dropped dir is a partition-drop that crashed
+    # before its final delete — the merge that created it already
+    # decided the partition is gone, so completing the delete is the
+    # roll-forward.
+    statedir.restore_backups(fs, Path, table_path, "__merge_old")
     for st in fs.listStatus(Path(table_path)):
-        name = st.getPath().getName()
-        if not (st.isDirectory() and name.startswith(".")):
-            continue
-        if name.endswith("__merge_old"):
-            live_p = Path(f"{table_path}/{name[1:-len('__merge_old')]}")
-            if not fs.exists(live_p):
-                fs.rename(st.getPath(), live_p)
-            else:
-                fs.delete(st.getPath(), True)
-        elif name.endswith("__merge_dropped"):
+        if statedir.backup_leaf(st.getPath().getName(), "__merge_dropped"):
             fs.delete(st.getPath(), True)
 
     # ONE aggregate answers the key-uniqueness check AND the update row
@@ -359,18 +329,10 @@ def merge_keyed(
         spark.read.format(fmt).load(staging).count() if staged_leaves else 0
     )
     for leaf in staged_leaves:
-        live = f"{table_path}/{leaf}"
-        old = f"{table_path}/.{leaf}__merge_old"
-        fs.delete(Path(old), True)
-        # rename() returns False on failure rather than raising; a
-        # swallowed failure here would let the trailing deletes destroy
-        # BOTH the pre-merge partition and the staged data (r09 ADVICE)
-        if fs.exists(Path(live)) and not fs.rename(Path(live), Path(old)):
-            raise IOError(f"merge swap-out rename failed for {leaf}")
-        if not fs.rename(Path(f"{staging}/{leaf}"), Path(live)):
-            fs.rename(Path(old), Path(live))
-            raise IOError(f"merge swap-in rename failed for {leaf}")
-        fs.delete(Path(old), True)
+        statedir.publish_dir(
+            fs, Path, f"{table_path}/{leaf}", f"{staging}/{leaf}",
+            f"{table_path}/.{leaf}__merge_old",
+        )
     fs.delete(Path(staging), True)
 
     # partitions the merge emptied: touched but absent from the staged
@@ -474,21 +436,15 @@ def _table_sig(fs, Path, table_path: str, partition_col: str) -> str:
 def _read_index_meta(spark: SparkSession, table_path: str) -> "dict | None":
     import json
 
-    from kafka_connect_hdfs_spark.statedir import read_text
-
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
     _, _, meta_path = _index_dirs(table_path)
     if not fs.exists(Path(meta_path)):
         return None
-    return json.loads(read_text(spark, Path(meta_path)))
+    return json.loads(statedir.read_text(spark, Path(meta_path)))
 
 
 def _write_index_meta(spark: SparkSession, table_path: str, meta: dict) -> None:
     import json
-
-    from kafka_connect_hdfs_spark import statedir
 
     fs, Path = statedir.hadoop_fs(spark, table_path)
     root, _, meta_path = _index_dirs(table_path)
@@ -537,8 +493,6 @@ def build_key_index(
     READABLE once built; it cannot conjure the table's key dtype). With
     the schema supplied, the build publishes an empty index whose
     recorded schema carries the declared key/partition dtypes."""
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
     root, data_dir, _ = _index_dirs(table_path)
     reader = spark.read.format(fmt)
@@ -564,14 +518,9 @@ def build_key_index(
     pairs.hint("rebalance", "bucket").write.partitionBy(
         "bucket"
     ).mode("overwrite").parquet(staging)
-    old = f"{root}/.data_old"
-    fs.delete(Path(old), True)
-    if fs.exists(Path(data_dir)) and not fs.rename(Path(data_dir), Path(old)):
-        raise IOError(f"key index swap-out rename failed for {table_path}")
-    if not fs.rename(Path(staging), Path(data_dir)):
-        fs.rename(Path(old), Path(data_dir))
-        raise IOError(f"key index swap-in rename failed for {table_path}")
-    fs.delete(Path(old), True)
+    # no restore on entry: the index is rebuilt whole from the table,
+    # so a stranded .data_old backup is never the only copy of anything
+    statedir.publish_dir(fs, Path, data_dir, staging, f"{root}/.data_old")
     meta = {
         "key_col": key_col,
         "partition_col": partition_col,
@@ -596,8 +545,6 @@ def key_index_status(
     meta = _read_index_meta(spark, table_path)
     if meta is None:
         return "absent"
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
     cur = _table_sig(fs, Path, table_path, partition_col)
     return "fresh" if cur == meta.get("sig") else "stale"
@@ -663,8 +610,6 @@ def locate_keys(
         or meta.get("format") != fmt
     ):
         return None
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
     if _table_sig(fs, Path, table_path, partition_col) != meta["sig"]:
         return None  # stale: correctness falls back to the scan
@@ -708,8 +653,6 @@ def refresh_key_index(
     meta whose fingerprint no longer matches the merged table, so the
     index reads as stale and LOCATE falls back — a half-refreshed index
     can never serve wrong answers."""
-    from kafka_connect_hdfs_spark import statedir
-
     fs, Path = statedir.hadoop_fs(spark, table_path)
     root, data_dir, _ = _index_dirs(table_path)
     n_buckets = int(meta["n_buckets"])
@@ -748,18 +691,14 @@ def refresh_key_index(
             "bucket"
         ).mode("overwrite").parquet(staging)
         for b in buckets:
-            leaf = f"bucket={b}"
-            live = Path(f"{data_dir}/{leaf}")
-            old = Path(f"{root}/.bucket_{b}__old")
-            fs.delete(old, True)
-            if fs.exists(live) and not fs.rename(live, old):
-                raise IOError(f"index bucket swap-out failed for {leaf}")
-            staged = Path(f"{staging}/{leaf}")
-            if fs.exists(staged):
-                if not fs.rename(staged, live):
-                    fs.rename(old, live)
-                    raise IOError(f"index bucket swap-in failed for {leaf}")
-            fs.delete(old, True)
+            live = f"{data_dir}/bucket={b}"
+            staged = f"{staging}/bucket={b}"
+            if fs.exists(Path(staged)):
+                statedir.publish_dir(
+                    fs, Path, live, staged, f"{root}/.bucket_{b}__old"
+                )
+            else:
+                fs.delete(Path(live), True)  # the merge emptied the bucket
         fs.delete(Path(staging), True)
     meta = dict(meta)
     meta["sig"] = _table_sig(fs, Path, table_path, partition_col)

@@ -1519,9 +1519,9 @@ def query_ivf_index(
     # merge-on-read deletes: tombstoned ids (delete_from_ivf_index) are
     # invisible to serving via one broadcast anti-join — vectors stay in
     # the cell files until vacuum_ivf_index folds the log in
-    from kafka_connect_hdfs_spark.snapshots import _fs
+    from kafka_connect_hdfs_spark import statedir
 
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     if fs.exists(Path(path + "/_tombstones")):
         tomb = (
             spark.read.parquet(path + "/_tombstones")
@@ -3097,41 +3097,27 @@ def vacuum_ivf_index(
     Scale shape (the erasure.py protocol re-aimed at the index): cell
     discovery scans just the pruned ``(id, cell)`` projection; each
     affected cell rewrites independently to a hidden sibling and swaps
-    via the cdc.py two-rename pattern — old cell renamed aside, new cell
-    renamed in, backup deleted LAST — so a crash anywhere leaves either
-    the old or the new data recoverable (the retry restores a stranded
-    backup before re-vacuuming). The swap window is two filesystem
-    metadata ops wide; a concurrent reader hitting that exact instant
+    in with :func:`statedir.publish_dir` — old cell renamed aside, new
+    cell renamed in, backup deleted LAST — so a crash anywhere leaves
+    either the old or the new data, and the next call restores a
+    stranded backup on entry before re-vacuuming. The swap window is
+    two filesystem metadata ops wide; a concurrent reader hitting that exact instant
     sees the cell absent, not partial — callers needing stronger
     isolation serialize vacuum against serving (single-accessor, as the
     lifecycle gate does). Untouched cells keep their files
     byte-identical. Clearing the log LAST makes a crash re-runnable:
     already-swapped cells simply contain no tombstoned rows on retry.
     """
-    from kafka_connect_hdfs_spark.snapshots import _fs
+    from kafka_connect_hdfs_spark import statedir
 
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     # recovery pre-pass: a crash between a prior vacuum's two renames
     # strands a cell at its hidden backup name, where the parquet scan
     # (and therefore the affected-cell discovery below) cannot see it —
     # restore every stranded backup BEFORE discovery, drop stale ones
     # whose publish completed (r05 ADVICE item)
-    cells_root = Path(path + "/cells")
-    if fs.exists(cells_root):
-        for st in fs.listStatus(cells_root):
-            name = st.getPath().getName()
-            if not (name.startswith(".cell=") and name.endswith("__vacuum_old")):
-                continue
-            published = Path(
-                f"{path}/cells/{name[1:].split('.__vacuum_old')[0]}"
-            )
-            if not fs.exists(published):
-                if not fs.rename(st.getPath(), published):
-                    raise IOError(
-                        f"vacuum recovery failed: cannot restore {name}"
-                    )
-            else:
-                fs.delete(st.getPath(), True)
+    if fs.exists(Path(path + "/cells")):
+        statedir.restore_backups(fs, Path, path + "/cells", ".__vacuum_old")
     tomb_dir = path + "/_tombstones"
     if not fs.exists(Path(tomb_dir)):
         return {}
@@ -3169,14 +3155,7 @@ def vacuum_ivf_index(
         if fs.exists(Path(tmp)):
             fs.delete(Path(tmp), True)
         kept.write.parquet(tmp)
-        # two-rename publish (cdc._merge_batch pattern): old aside, new
-        # in, backup deleted last — old data survives a crash anywhere
-        if not fs.rename(Path(cell_dir), Path(bak)):
-            raise IOError(f"vacuum backup rename failed for cell={c}")
-        if not fs.rename(Path(tmp), Path(cell_dir)):
-            fs.rename(Path(bak), Path(cell_dir))  # restore and fail
-            raise IOError(f"vacuum swap failed for cell={c}")
-        fs.delete(Path(bak), True)
+        statedir.publish_dir(fs, Path, cell_dir, tmp, bak)
 
     # cells rewrite independently (disjoint dirs) — overlap the small
     # per-cell write jobs so one cell's straggling tasks back-fill with

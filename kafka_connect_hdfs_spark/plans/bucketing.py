@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_connect_hdfs_spark import statedir
 from kafka_connect_hdfs_spark.functions import dec_sum_double
 
 
@@ -34,15 +35,12 @@ def create_bucketed_facts(
 
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     for t in ("lineitem_bucketed", "orders_bucketed"):
         spark.sql(f"DROP TABLE IF EXISTS {database}.{t}")
         # a crashed earlier write can leave the managed location behind
+        fs, Path = statedir.hadoop_fs(spark, f"{warehouse}/{t}")
         loc = Path(f"{warehouse}/{t}")
-        fs = loc.getFileSystem(conf)
         if fs.exists(loc):
             fs.delete(loc, True)
     (

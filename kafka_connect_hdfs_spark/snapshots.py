@@ -26,15 +26,11 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    # route through the statedir.hadoop_fs fault-injection seam (r11):
-    # the chaos kill-point sweep monkeypatches that single acquisition
-    # point, so every snapshot-log mutation (manifest rename, tombstone
-    # write, delete-compaction commit, expire) is killable in turn
-    from kafka_connect_hdfs_spark import statedir
-
-    return statedir.hadoop_fs(spark, path)
+# module-attribute calls (statedir.hadoop_fs): the chaos kill-point sweep
+# patches that single acquisition point, so every snapshot-log mutation
+# (manifest rename, tombstone write, delete-compaction commit, expire)
+# is killable in turn
+from kafka_connect_hdfs_spark import statedir
 
 
 def _manifest_dir(path: str) -> str:
@@ -43,7 +39,7 @@ def _manifest_dir(path: str) -> str:
 
 def list_snapshots(spark: SparkSession, path: str) -> "list[int]":
     """Committed versions in ascending order (empty if no table yet)."""
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     mdir = Path(_manifest_dir(path))
     if not fs.exists(mdir):
         return []
@@ -56,7 +52,7 @@ def list_snapshots(spark: SparkSession, path: str) -> "list[int]":
 
 
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     p = Path(f"{_manifest_dir(path)}/v{version}.json")
     stream = fs.open(p)
     try:
@@ -121,7 +117,7 @@ def commit_snapshot(
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown snapshot mode: {mode!r}")
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     versions = list_snapshots(spark, path)
     version = (versions[-1] + 1) if versions else 1
     prev = _read_manifest(spark, path, versions[-1]) if versions else None
@@ -828,7 +824,7 @@ def delete_rows(
     union — broadcast by AQE below the threshold. Accumulating many
     delete commits grows that union; apply_deletes bounds it.
     """
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     versions = list_snapshots(spark, path)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {path}")
@@ -919,7 +915,7 @@ def commit_changes(
     probe's metadata. Accumulated tombstones fold via
     :func:`apply_deletes` as usual.
     """
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     versions = list_snapshots(spark, path)
     if not versions:
         raise FileNotFoundError(f"no snapshots at {path}")
@@ -1053,7 +1049,7 @@ def apply_deletes(spark: SparkSession, path: str, now=None) -> dict:
             "version": None, "n_dirs_rewritten": 0,
             "n_dirs_untouched": len(man["files"]),
         }
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     k = man["delete_key"]
     reader = spark.read.format(man["format"])
 
@@ -1169,7 +1165,7 @@ def rollback_snapshot(
         raise FileNotFoundError(
             f"snapshot v{to_version} not found (have {versions})"
         )
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     target = _read_manifest(spark, path, to_version)
     latest = _read_manifest(spark, path, versions[-1])
     version = versions[-1] + 1
@@ -1235,7 +1231,7 @@ def expire_snapshots(
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     versions = list_snapshots(spark, path)
     tagged = set(list_tags(spark, path).values())
     expired = [v for v in versions[:-keep_last] if v not in tagged]
@@ -1324,7 +1320,7 @@ def orphan_report(spark: SparkSession, path: str) -> DataFrame:
     Scale: pure driver metadata (one directory listing + the manifest
     list); no data files are opened.
     """
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     own_prefix = path.rstrip("/") + "/data/"
     referenced: "dict[str, int]" = {}
     tomb_referenced: "dict[str, int]" = {}
@@ -1387,7 +1383,7 @@ def vacuum_orphans(spark: SparkSession, path: str) -> "list[str]":
     Scale: driver metadata + one recursive delete per orphan dir; no
     data files are read.
     """
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     deleted: "list[str]" = []
     for r in orphan_report(spark, path).collect():
         if r["status"] != "orphan":
@@ -1422,7 +1418,7 @@ def list_clones(spark: SparkSession, path: str) -> "list[dict]":
     which data dirs a clone still pins (r08 verdict item 4). Driver
     metadata only; includes stale registrations (clone deleted from
     disk) — :func:`expire_snapshots` sweeps those."""
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     cdir = Path(_clones_dir(path))
     if not fs.exists(cdir):
         return []
@@ -1457,7 +1453,7 @@ def drop_clone(spark: SparkSession, src_path: str, dst_path: str) -> bool:
     NOT delete the clone's own files (delete the clone table separately;
     a vanished clone is also auto-swept as stale). Returns whether a
     registration was removed."""
-    fs, Path = _fs(spark, src_path)
+    fs, Path = statedir.hadoop_fs(spark, src_path)
     p = Path(f"{_clones_dir(src_path)}/{_clone_reg_name(dst_path)}.json")
     return bool(fs.delete(p, False))
 
@@ -1489,38 +1485,26 @@ def tag_snapshot(
     v = versions[-1] if version is None else version
     if v not in versions:
         raise FileNotFoundError(f"snapshot v{v} not found (have {versions})")
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     tdir = _tags_dir(path)
     fs.mkdirs(Path(tdir))
-    tmp = Path(f"{tdir}/.{tag}.json.tmp")
-    final = Path(f"{tdir}/{tag}.json")
-    bak = Path(f"{tdir}/.{tag}.json.bak")
-    out = fs.create(tmp, True)
+    tmp = f"{tdir}/.{tag}.json.tmp"
+    final = f"{tdir}/{tag}.json"
+    bak = f"{tdir}/.{tag}.json.bak"
+    out = fs.create(Path(tmp), True)
     try:
         out.write(bytearray(json.dumps({"tag": tag, "version": v}).encode()))
     finally:
         out.close()
-    # ref move via the two-rename protocol (delete-then-rename would
-    # leave the tag GONE if a crash lands in the gap): old ref aside,
-    # new ref in, backup dropped last; list_tags falls back to a
-    # stranded .bak so the ref never stops resolving.
-    # Recovery pre-step (r06 ADVICE, mirrors swap_state_update): if the
-    # PREVIOUS move crashed between its two renames, the stranded .bak is
-    # the tag's only surviving ref — restore it to final FIRST, so a
-    # failure later in THIS move still has an old value to fall back to
-    # (deleting it up front would lose the tag entirely on a failed
-    # tmp->final rename).
-    if not fs.exists(final) and fs.exists(bak):
-        if not fs.rename(bak, final):
-            raise IOError(f"tag crash-recovery restore failed for {tag}")
-    fs.delete(bak, False)
-    if fs.exists(final):
-        if not fs.rename(final, bak):
-            raise IOError(f"tag backup rename failed for {tag}")
-    if not fs.rename(tmp, final):
-        fs.rename(bak, final)  # restore the old ref and fail
-        raise IOError(f"tag commit rename failed for {tag}")
-    fs.delete(bak, False)
+    # ref move via the two-rename publish (delete-then-rename would
+    # leave the tag GONE if a crash lands in the gap); list_tags falls
+    # back to a stranded .bak so the ref never stops resolving.
+    # Recovery pre-step (r06 ADVICE): if the PREVIOUS move crashed
+    # between its two renames, the stranded .bak is the tag's only
+    # surviving ref — restore it to final FIRST, so a failure later in
+    # THIS move still has an old value to fall back to.
+    statedir.restore_backup(fs, Path, final, bak)
+    statedir.publish_dir(fs, Path, final, tmp, bak)
     return v
 
 
@@ -1529,7 +1513,7 @@ def list_tags(spark: SparkSession, path: str) -> "dict[str, int]":
     whose published ref vanished mid-move resolves through its ``.bak``
     (the crash window between tag_snapshot's two renames) — the live
     ref always wins when both exist."""
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     tdir = Path(_tags_dir(path))
     if not fs.exists(tdir):
         return {}
@@ -1737,7 +1721,7 @@ def snapshot_audit(spark: SparkSession, path: str) -> DataFrame:
     are one count per version — parquet footer statistics when the
     version has no tombstones, one anti-join count otherwise.
     """
-    fs, Path = _fs(spark, path)
+    fs, Path = statedir.hadoop_fs(spark, path)
     rows = []
     for v in list_snapshots(spark, path):
         man = _read_manifest(spark, path, v)
@@ -1812,7 +1796,7 @@ def clone_table(
     # register at the SOURCE first: a crash between the two writes leaves
     # a stale registration (no clone manifest → swept later), never a
     # live-but-unprotected clone
-    sfs, SPath = _fs(spark, src_path)
+    sfs, SPath = statedir.hadoop_fs(spark, src_path)
     cdir = _clones_dir(src_path)
     sfs.mkdirs(SPath(cdir))
     reg = {
@@ -1836,7 +1820,7 @@ def clone_table(
     if not sfs.rename(reg_tmp, reg_final):
         raise IOError(f"clone registration rename failed for {dst_path}")
 
-    fs, Path = _fs(spark, dst_path)
+    fs, Path = statedir.hadoop_fs(spark, dst_path)
     manifest = {
         "version": 1,
         # the clone's seq counter CONTINUES from the source's: carried

@@ -1,23 +1,38 @@
-"""Crash-recoverable state-directory swap — the shared protocol behind
-every foreachBatch-maintained parquet state table (streaming CDC upsert,
-streaming mart refresh).
+"""The one swap-and-recover protocol of the package, and its one
+filesystem seam. Every directory (or ref file) that is replaced in place
+is published here, mirroring the reference's WAL rename-is-the-commit
+discipline: the rename is the commit, and recovery replays it.
 
-Protocol (two-rename publish, mirroring the reference's WAL
-rename-is-the-commit discipline):
+Primitives:
 
-    1. recover: state missing but backup present ⇒ the previous run
-       crashed between the two renames — restore the backup FIRST
-       (otherwise the replayed batch rebuilds state from itself alone).
-    2. compute the new state from (current state | None) and write it to
-       a hidden sibling; optionally drop a marker file inside it (e.g.
-       the last-applied batch id — parquet readers ignore underscore
-       files) so the publish and the marker are ONE atomic unit.
-    3. publish: rename live aside, rename new in, delete the backup
-       LAST; on a failed publish rename, restore the backup and raise.
+- :func:`hadoop_fs` — the only place a Hadoop FileSystem handle is
+  acquired (and so the fault-injection seam of the kill-point sweep).
+- :func:`publish_dir` — drop a stale backup, rename live aside to the
+  backup, rename staged in, delete the backup LAST; a failed publish
+  rename restores the backup and raises.
+- :func:`restore_backup` / :func:`restore_backups` — the restore
+  decision, run on entry: live missing and backup present ⇒ the last
+  publish died between its renames, rename the backup back; both
+  present ⇒ drop the backup. The directory form handles every
+  ``.<leaf><suffix>`` backup under one parent.
 
-A crash anywhere leaves either the old or the new state recoverable;
-the window where the live path is absent is two metadata ops wide and
-healed by step 1 on the next batch.
+Callers (each keeps its own hidden sibling names):
+
+- :func:`swap_state_update` / :func:`recover_state` here — the
+  foreachBatch state tables (streaming CDC upsert, mart refresh,
+  changelog mirror), with an optional marker file published in the
+  same rename;
+- ``compaction.compact_partitions`` and ``relayout_partitions`` (global
+  swap and the scoped cutover), ``erasure.erase_keys``,
+  ``wap.write_audit_publish``;
+- ``merge.merge_upsert`` / ``merge_keyed`` (per-leaf swaps),
+  ``merge.build_key_index`` / ``refresh_key_index`` (index data and
+  buckets);
+- ``operators.similarity.vacuum_ivf_index`` (per-cell swaps) and
+  ``snapshots.tag_snapshot`` (the tag ref file).
+
+A crash anywhere leaves either the old or the new data, and the next
+call's entry recovery heals the two-rename window.
 """
 
 from __future__ import annotations
@@ -28,21 +43,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def hadoop_fs(spark: SparkSession, path: str):
-    """Single acquisition point for the Hadoop FileSystem handle used by
-    the rename-protocol operators (state swap, relayout, merge). This is
-    the FAULT-INJECTION SEAM: the chaos kill-point sweep
-    (tests/test_chaos_killpoints.py) monkeypatches this function to wrap
-    the returned fs in a mutation-counting proxy that dies at every
-    rename/delete/create boundary in turn — so recovery is proven at
-    EVERY boundary mechanically, not at hand-picked ones."""
+    """Single acquisition point for the Hadoop FileSystem handle: no
+    other module calls ``getFileSystem`` (a structural test pins it),
+    and callers reach this as a module attribute (``statedir.hadoop_fs``,
+    never a ``from ... import`` copy). This is the FAULT-INJECTION SEAM:
+    the chaos kill-point sweep (tests/test_chaos_killpoints.py)
+    monkeypatches this function to wrap the returned fs in a
+    mutation-counting proxy that dies at every rename/delete/create
+    boundary in turn — so recovery is proven at EVERY boundary
+    mechanically, not at hand-picked ones."""
     jvm = spark._jvm
     Path = jvm.org.apache.hadoop.fs.Path
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, Path
-
-
-def _fs(spark: SparkSession, path: str):
-    return hadoop_fs(spark, path)
 
 
 def read_text(spark: SparkSession, path) -> str:
@@ -53,7 +66,7 @@ def read_text(spark: SparkSession, path) -> str:
     opened directly, because round-tripping it through str() re-parses
     '#'/'%' as URI syntax and targets a different file (r07 review)."""
     if isinstance(path, str):
-        fs, Path = _fs(spark, path)
+        fs, Path = hadoop_fs(spark, path)
         p = Path(path)
     else:
         p = path
@@ -73,7 +86,7 @@ def state_marker(
 ) -> "str | None":
     """The marker file name with ``prefix`` inside the live state dir
     (None when absent). Each swap writes at most one."""
-    fs, Path = _fs(spark, state_path)
+    fs, Path = hadoop_fs(spark, state_path)
     if not fs.exists(Path(state_path)):
         return None
     for st in fs.listStatus(Path(state_path)):
@@ -83,24 +96,69 @@ def state_marker(
     return None
 
 
-def recover_state(spark: SparkSession, state_path: str, suffix: str) -> None:
-    """Step-1 crash recovery of the two-rename swap, callable on its
-    own: state missing but the ``_old`` backup present means the
-    previous swap died between its renames — restore the backup.
-    Callers that READ swap-published metadata (e.g. the changelog
-    mirror's sync marker) before swapping must run this first, or a
-    crash in that two-op window reads as 'no state yet'."""
-    fs, Path = _fs(spark, state_path)
+def restore_backup(fs, Path, live: str, backup: str) -> None:
+    """The restore decision for one ``live``/``backup`` pair, run on
+    entry by every caller of :func:`publish_dir`. Live missing and the
+    backup present: the last publish died between its two renames, so
+    the backup is the only copy — rename it back (raise if that fails).
+    Both present: the publish landed and only its final delete was
+    lost — drop the backup."""
+    if not fs.exists(Path(backup)):
+        return
+    if fs.exists(Path(live)):
+        fs.delete(Path(backup), True)
+    elif not fs.rename(Path(backup), Path(live)):
+        raise IOError(f"crash-recovery restore failed: {backup} -> {live}")
+
+
+def backup_leaf(name: str, suffix: str) -> "str | None":
+    """The live leaf a ``.<leaf><suffix>`` backup name belongs to, else
+    None."""
+    if name.startswith(".") and name.endswith(suffix):
+        return name[1:-len(suffix)] or None
+    return None
+
+
+def restore_backups(fs, Path, parent: str, suffix: str) -> None:
+    """:func:`restore_backup` for every ``.<leaf><suffix>`` entry of the
+    directory ``parent`` — the entry recovery of callers that publish
+    many leaves under one parent."""
+    for st in fs.listStatus(Path(parent)):
+        name = st.getPath().getName()
+        leaf = backup_leaf(name, suffix)
+        if leaf is not None:
+            restore_backup(fs, Path, f"{parent}/{leaf}", f"{parent}/{name}")
+
+
+def publish_dir(fs, Path, live: str, staged: str, backup: str) -> None:
+    """Replace ``live`` with ``staged`` (a directory, or a single file)
+    by the two-rename publish: drop any stale backup, rename ``live``
+    aside to ``backup`` if it exists, rename ``staged`` in, delete the
+    backup last. A failed publish rename restores the backup and raises.
+    Callers run :func:`restore_backup` / :func:`restore_backups` on
+    entry, so a backup this deletes is never the only copy."""
+    fs.delete(Path(backup), True)
+    if fs.exists(Path(live)) and not fs.rename(Path(live), Path(backup)):
+        raise IOError(f"publish backup rename failed: {live} -> {backup}")
+    if not fs.rename(Path(staged), Path(live)):
+        fs.rename(Path(backup), Path(live))
+        raise IOError(f"publish rename failed: {staged} -> {live}")
+    fs.delete(Path(backup), True)
+
+
+def _siblings(state_path: str, suffix: str) -> "tuple[str, str]":
     parent, leaf = state_path.rstrip("/").rsplit("/", 1)
-    old = f"{parent}/.{leaf}__{suffix}_old"
-    if not fs.exists(Path(state_path)) and fs.exists(Path(old)):
-        if not fs.rename(Path(old), Path(state_path)):
-            raise IOError(f"{suffix} state swap: crash-recovery restore failed")
-    elif fs.exists(Path(state_path)) and fs.exists(Path(old)):
-        # live + backup: the publish landed and only the final backup
-        # delete was lost — finish it (a marker-guarded caller may
-        # never swap again, so the residue would otherwise persist)
-        fs.delete(Path(old), True)
+    return f"{parent}/.{leaf}__{suffix}_new", f"{parent}/.{leaf}__{suffix}_old"
+
+
+def recover_state(spark: SparkSession, state_path: str, suffix: str) -> None:
+    """Step-1 crash recovery of :func:`swap_state_update`, callable on
+    its own. Callers that READ swap-published metadata (e.g. the
+    changelog mirror's sync marker) before swapping must run this
+    first, or a crash in the two-rename window reads as 'no state
+    yet'."""
+    fs, Path = hadoop_fs(spark, state_path)
+    restore_backup(fs, Path, state_path, _siblings(state_path, suffix)[1])
 
 
 def swap_state_update(
@@ -111,15 +169,12 @@ def swap_state_update(
     marker: "str | None" = None,
 ) -> None:
     """Atomically replace the parquet dir at ``state_path`` with
-    ``update_fn(current_state_or_None)`` via the two-rename protocol.
+    ``update_fn(current_state_or_None)`` via :func:`publish_dir`.
     ``suffix`` namespaces the hidden sibling dirs (``.<leaf>__<suffix>_new``
     / ``_old``) so protocols sharing a parent never collide."""
-    fs, Path = _fs(spark, state_path)
-    parent, leaf = state_path.rstrip("/").rsplit("/", 1)
-    tmp = f"{parent}/.{leaf}__{suffix}_new"
-    old = f"{parent}/.{leaf}__{suffix}_old"
-
-    recover_state(spark, state_path, suffix)
+    fs, Path = hadoop_fs(spark, state_path)
+    tmp, old = _siblings(state_path, suffix)
+    restore_backup(fs, Path, state_path, old)
 
     base = (
         spark.read.parquet(state_path)
@@ -131,11 +186,4 @@ def swap_state_update(
     out.write.parquet(tmp)
     if marker is not None:
         fs.create(Path(f"{tmp}/{marker}"), True).close()
-    fs.delete(Path(old), True)
-    if fs.exists(Path(state_path)):
-        if not fs.rename(Path(state_path), Path(old)):
-            raise IOError(f"{suffix} state swap: backup rename failed")
-    if not fs.rename(Path(tmp), Path(state_path)):
-        fs.rename(Path(old), Path(state_path))  # restore and fail
-        raise IOError(f"{suffix} state swap: publish rename failed")
-    fs.delete(Path(old), True)
+    publish_dir(fs, Path, state_path, tmp, old)

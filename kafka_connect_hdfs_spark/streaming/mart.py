@@ -83,13 +83,13 @@ def _stream_identity(spark: SparkSession, checkpoint: str) -> "str | None":
     the replay guard must not trust them)."""
     import json
 
-    from kafka_connect_hdfs_spark.statedir import _fs, read_text
+    from kafka_connect_hdfs_spark import statedir
 
-    fs, Path = _fs(spark, checkpoint)
+    fs, Path = statedir.hadoop_fs(spark, checkpoint)
     p = f"{checkpoint.rstrip('/')}/metadata"
     if not fs.exists(Path(p)):
         return None
-    return str(json.loads(read_text(spark, p))["id"])
+    return str(json.loads(statedir.read_text(spark, p))["id"])
 
 
 def _parse_marker(name: str) -> "tuple[str | None, int]":

@@ -6,8 +6,9 @@ visible immediately).
 
 Composes this repo's existing pieces: any sink format for the stage write,
 the quality/integrity operators (or any ``DataFrame -> bool`` predicate)
-for the audit, and the compaction/merge hidden-sibling double-rename for
-the atomic publish.
+for the audit, and :func:`statedir.publish_dir` for the atomic publish. A
+crash inside the publish leaves the old table in its ``.<leaf>__wap_old``
+backup; the next call restores it on entry.
 
 Scale: the audit runs on the staged files exactly as consumers would read
 them — write corruption, schema drift, and partial-write truncation are
@@ -19,6 +20,8 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kafka_connect_hdfs_spark import statedir
 
 
 def write_audit_publish(
@@ -36,14 +39,12 @@ def write_audit_publish(
 
     Returns ``{"published": bool, "checks": {name: bool}, "staging": str}``.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(path).getFileSystem(conf)
-
-    parent, leaf = path.rstrip("/").rsplit("/", 1)
+    fs, Path = statedir.hadoop_fs(spark, path)
+    live = path.rstrip("/")
+    parent, leaf = live.rsplit("/", 1)
     staging = f"{parent}/.{leaf}__wap_stage"
     old = f"{parent}/.{leaf}__wap_old"
+    statedir.restore_backup(fs, Path, live, old)
     fs.delete(Path(staging), True)
 
     w = df.write.format(fmt).mode("overwrite")
@@ -56,9 +57,5 @@ def write_audit_publish(
     if not all(results.values()):
         return {"published": False, "checks": results, "staging": staging}
 
-    fs.delete(Path(old), True)
-    if fs.exists(Path(path)):
-        fs.rename(Path(path), Path(old))
-    fs.rename(Path(staging), Path(path))
-    fs.delete(Path(old), True)
+    statedir.publish_dir(fs, Path, live, staging, old)
     return {"published": True, "checks": results, "staging": staging}

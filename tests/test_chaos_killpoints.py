@@ -22,6 +22,9 @@ Spark's crash contract, not ours.
 
 from __future__ import annotations
 
+import re
+import threading
+
 import pytest
 
 from kafka_connect_hdfs_spark import statedir
@@ -35,6 +38,12 @@ _MUTATORS = ("rename", "delete", "create", "mkdirs")
 
 
 class _FaultFS:
+    """Mutation-counting proxy. Operators that rewrite leaves in a thread
+    pool (compact_partitions, vacuum_ivf_index) share one proxy across
+    their pool threads, so the check-and-count is one locked step: a
+    budget is spent exactly once, and every mutation after the kill
+    raises too (the process is dead from that point on)."""
+
     def __init__(self, real, counter: dict, budget: "int | None"):
         self._real = real
         self._counter = counter
@@ -44,23 +53,20 @@ class _FaultFS:
         attr = getattr(self._real, name)
         if name in _MUTATORS:
             def wrapped(*a, **k):
-                if (
-                    self._budget is not None
-                    and self._counter["n"] >= self._budget
-                ):
-                    raise KillPoint(
-                        f"killed before mutation #{self._counter['n'] + 1} "
-                        f"({name})"
-                    )
-                self._counter["n"] += 1
+                with _count_lock:
+                    n = self._counter["n"]
+                    if self._budget is not None and n >= self._budget:
+                        raise KillPoint(
+                            f"killed before mutation #{n + 1} ({name})"
+                        )
+                    self._counter["n"] = n + 1
                 return attr(*a, **k)
 
             return wrapped
         return attr
 
 
-import threading
-
+_count_lock = threading.Lock()
 _tl = threading.local()
 _install_lock = threading.Lock()
 _orig_hadoop_fs = None
@@ -68,10 +74,16 @@ _active_patches = 0
 
 
 def _dispatching_hadoop_fs(spark, path):
-    fs, Path = _orig_hadoop_fs(spark, path)
     inj = getattr(_tl, "inj", None)
     if inj is None:
-        return fs, Path
+        # a thread outside every injection context (an operator's own
+        # pool thread acquiring its handle, say) would get the REAL fs
+        # and its mutations would escape both the count and the kill
+        raise RuntimeError(
+            "statedir.hadoop_fs called from a thread with no chaos "
+            f"injection context while a patch is active ({path})"
+        )
+    fs, Path = _orig_hadoop_fs(spark, path)
     counter, budget = inj
     return _FaultFS(fs, counter, budget), Path
 
@@ -81,9 +93,11 @@ class _patched_fs:
     CURRENT THREAD only. The module attribute is patched once with a
     dispatcher that reads a thread-local (counter, budget), so independent
     kill-point iterations can overlap in a thread pool (guide §2.6)
-    without seeing each other's budgets — none of the swept operators
-    spawns internal threads that touch statedir.hadoop_fs (the only
-    pooled operator, compact_partitions, is not under sweep)."""
+    without seeing each other's budgets. While any patch is active, a
+    call from a thread with no context raises instead of quietly handing
+    out the real fs. Pooled operators (compact_partitions) acquire the
+    handle once on the calling thread and share the proxy with their
+    pool threads, so every mutation still counts."""
 
     def __init__(self, counter: dict, budget: "int | None"):
         self.counter = counter
@@ -128,14 +142,17 @@ def _sweep(setup, op, recover, invariant, max_points: int = 64):
     n = counter["n"]
     assert 0 < n <= max_points, f"unexpected mutation count {n}"
 
-    # KILL at every boundary
+    # KILL at every boundary. setup/recover/invariant run under a
+    # never-killing context: other iterations keep the patch installed,
+    # and the dispatcher refuses threads without one
     def _one(k: int) -> None:
-        ctx = setup()
-        with _patched_fs({"n": 0}, k):
-            with pytest.raises(KillPoint):
-                op(ctx)
-        recover(ctx)
-        invariant(ctx)
+        with _patched_fs({"n": 0}, None):
+            ctx = setup()
+            with _patched_fs({"n": 0}, k):
+                with pytest.raises(KillPoint):
+                    op(ctx)
+            recover(ctx)
+            invariant(ctx)
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -597,3 +614,198 @@ def test_sweep_mirror_table_sync(spark, tmp_path):
 
     n = _sweep(setup, op, recover, invariant)
     assert n >= 3  # residue deletes + tombstone/data writes + rename
+
+
+# ---------------------------------------------------------------------------
+# the table-maintenance swaps on statedir.publish_dir: compaction (pooled),
+# erasure, WAP and the global relayout. Recovery is re-running the
+# operator (its entry restore), and the invariant is the visible rows plus
+# no swap residue anywhere next to or under the table
+
+
+_RESIDUE = re.compile(r"__\w*_(old|tmp)$|__wap_stage$")
+
+
+def _swap_residue(spark, root: str) -> "list[str]":
+    fs, Path = statedir.hadoop_fs(spark, root)
+    found = []
+
+    def walk(p):
+        for st in fs.listStatus(p):
+            name = st.getPath().getName()
+            if _RESIDUE.search(name):
+                found.append(st.getPath().toString())
+            elif st.isDirectory():
+                walk(st.getPath())
+
+    walk(Path(root))
+    return found
+
+
+def _rows(spark, path: str, *cols: str) -> set:
+    return {
+        tuple(r[c] for c in cols)
+        for r in spark.read.parquet(path).collect()
+    }
+
+
+def test_sweep_compact_partitions(spark, tmp_path):
+    from kafka_connect_hdfs_spark.compaction import compact_partitions
+
+    it = iter(range(10_000))
+    rows = [(k, f"a{k % 2}", f"b{k % 2}") for k in range(8)]
+
+    def setup():
+        root = str(tmp_path / f"cp{next(it)}")
+        df = spark.createDataFrame(rows, "k long, a string, b string")
+        for _ in range(2):  # two appends: every leaf holds 2 files
+            df.repartition(1).write.mode("append").partitionBy(
+                "a", "b"
+            ).parquet(f"{root}/t")
+        return {"root": root, "path": f"{root}/t"}
+
+    def op(ctx):
+        # 2 leaves (a=a0/b=b0, a=a1/b=b1) to compact: the pool runs
+        compact_partitions(spark, ctx["path"])
+
+    def recover(ctx):
+        op(ctx)
+
+    def invariant(ctx):
+        back = spark.read.parquet(ctx["path"])
+        got = sorted((r["k"], r["a"], r["b"]) for r in back.collect())
+        assert got == sorted(rows * 2)
+        assert len(back.inputFiles()) == 2  # one file per compacted leaf
+        assert _swap_residue(spark, ctx["root"]) == []
+
+    n = _sweep(setup, op, recover, invariant)
+    assert n >= 10  # per leaf: delete(tmp) + publish (delete, 2 renames, delete)
+
+
+def test_sweep_erase_keys(spark, tmp_path):
+    from kafka_connect_hdfs_spark.erasure import erase_keys
+
+    it = iter(range(10_000))
+    rows = [(k, f"p{k % 3}") for k in range(12)]
+    victims = [1, 2, 4]  # in p1, p2, p1: two affected dirs, p0 untouched
+
+    def setup():
+        root = str(tmp_path / f"er{next(it)}")
+        spark.createDataFrame(rows, "k long, p string").repartition(
+            1
+        ).write.partitionBy("p").parquet(f"{root}/t")
+        return {"root": root, "path": f"{root}/t"}
+
+    def op(ctx):
+        erase_keys(spark, ctx["path"], "k", victims)
+
+    def recover(ctx):
+        op(ctx)
+
+    def invariant(ctx):
+        assert _rows(spark, ctx["path"], "k", "p") == {
+            r for r in rows if r[0] not in victims
+        }
+        assert _swap_residue(spark, ctx["root"]) == []
+
+    n = _sweep(setup, op, recover, invariant)
+    assert n >= 10  # per dir: delete(tmp) + publish (delete, 2 renames, delete)
+
+
+def test_sweep_write_audit_publish(spark, tmp_path):
+    from kafka_connect_hdfs_spark.wap import write_audit_publish
+
+    it = iter(range(10_000))
+    old_rows = [(k, "old") for k in range(3)]
+    new_rows = [(k, "new") for k in range(5)]
+
+    def setup():
+        root = str(tmp_path / f"wap{next(it)}")
+        spark.createDataFrame(old_rows, "k long, tag string").write.parquet(
+            f"{root}/t"
+        )
+        return {"root": root, "path": f"{root}/t"}
+
+    def _wap(ctx, check):
+        return write_audit_publish(
+            spark,
+            spark.createDataFrame(new_rows, "k long, tag string"),
+            ctx["path"],
+            checks=[("audit", check)],
+        )
+
+    def op(ctx):
+        assert _wap(ctx, lambda d: d.count() > 0)["published"]
+
+    def recover(ctx):
+        # the staged data never derives from the live table, so a
+        # re-run that passes its audit would hide a lost old table. A
+        # re-run whose audit FAILS must leave the table readable: old
+        # rows (its entry restore put a stranded backup back), or new
+        # ones if the crash came after the publish rename
+        assert not _wap(ctx, lambda d: False)["published"]
+        assert _rows(spark, ctx["path"], "k", "tag") in (
+            set(old_rows), set(new_rows)
+        )
+        op(ctx)
+
+    def invariant(ctx):
+        assert _rows(spark, ctx["path"], "k", "tag") == set(new_rows)
+        assert _swap_residue(spark, ctx["root"]) == []
+
+    n = _sweep(setup, op, recover, invariant)
+    assert n >= 5  # delete(stage) + publish (delete, 2 renames, delete)
+
+
+def test_sweep_relayout_global(spark, tmp_path):
+    from kafka_connect_hdfs_spark.compaction import relayout_partitions
+
+    it = iter(range(10_000))
+    rows = [(k, f"a{k % 2}", f"b{k % 3}") for k in range(12)]
+
+    def setup():
+        root = str(tmp_path / f"rg{next(it)}")
+        spark.createDataFrame(rows, "k long, a string, b string").repartition(
+            1
+        ).write.partitionBy("a").parquet(f"{root}/t")
+        return {"root": root, "path": f"{root}/t"}
+
+    def op(ctx):
+        relayout_partitions(spark, ctx["path"], ["b"])
+
+    def recover(ctx):
+        op(ctx)
+
+    def invariant(ctx):
+        fs, Path = statedir.hadoop_fs(spark, ctx["path"])
+        leaves = {
+            st.getPath().getName()
+            for st in fs.listStatus(Path(ctx["path"]))
+            if st.isDirectory()
+        }
+        assert leaves == {"b=b0", "b=b1", "b=b2"}
+        assert _rows(spark, ctx["path"], "k", "a", "b") == set(rows)
+        assert _swap_residue(spark, ctx["root"]) == []
+
+    n = _sweep(setup, op, recover, invariant)
+    assert n >= 5  # delete(tmp) + publish (delete, 2 renames, delete)
+
+
+# ---------------------------------------------------------------------------
+# one filesystem seam: a module that acquired its FileSystem any other way
+# would mutate outside every sweep above
+
+
+def test_only_statedir_acquires_a_filesystem():
+    import pathlib
+
+    import kafka_connect_hdfs_spark
+
+    pkg = pathlib.Path(kafka_connect_hdfs_spark.__file__).parent
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p.name != "statedir.py" or p.parent != pkg
+        if "getFileSystem" in p.read_text(encoding="utf-8")
+    )
+    assert offenders == [], offenders

@@ -56,3 +56,25 @@ def test_compaction_idempotent(spark, sf_dir, tmp_path):
     res2 = compact_partitions(spark, f"file://{base}")
     assert res2 == {}  # nothing left to compact
     assert spark.read.parquet(base).count() == n1
+
+
+def test_compaction_restores_unpartitioned_root_stranded_at_backup(
+    spark, tmp_path
+):
+    """An unpartitioned table is its own leaf, so a crash between the
+    swap's renames strands the WHOLE table beside it; the next call
+    restores it on entry and compacts it."""
+    import os
+
+    path = f"{tmp_path}/t"
+    df = spark.range(20).withColumnRenamed("id", "k")
+    for _ in range(2):
+        df.repartition(1).write.mode("append").parquet(path)
+    os.rename(path, f"{tmp_path}/.t__compact_old")  # the crash window
+
+    res = compact_partitions(spark, path)
+    assert res == {"": (2, 1)}
+    assert sorted(r["k"] for r in spark.read.parquet(path).collect()) == sorted(
+        list(range(20)) * 2
+    )
+    assert not os.path.exists(f"{tmp_path}/.t__compact_old")

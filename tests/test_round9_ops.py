@@ -322,7 +322,7 @@ def test_orphan_report_counts_clone_pins_as_live(spark, tmp_path):
     from kafka_connect_hdfs_spark.snapshots import (
         clone_table, commit_snapshot, orphan_report,
     )
-    from kafka_connect_hdfs_spark.statedir import _fs as _sfs
+    from kafka_connect_hdfs_spark.statedir import hadoop_fs as _sfs
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "clone")
@@ -806,7 +806,7 @@ def test_vacuum_deletes_orphans_keeps_live_and_clone_pinned(spark, tmp_path):
     from kafka_connect_hdfs_spark.snapshots import (
         clone_table, commit_snapshot, vacuum_orphans,
     )
-    from kafka_connect_hdfs_spark.statedir import _fs as _sfs
+    from kafka_connect_hdfs_spark.statedir import hadoop_fs as _sfs
 
     src = str(tmp_path / "src")
     dst = str(tmp_path / "clone")

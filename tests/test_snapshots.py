@@ -161,7 +161,7 @@ def test_tag_snapshot_refs_and_expiry_interaction(spark, tmp_path):
         r["x"] for r in read_tag(spark, path, "pinned_old").collect()
     ) == [1, 2]
     # dropping the tag releases the version on the next expiry
-    from kafka_connect_hdfs_spark.snapshots import _fs as _snap_fs
+    from kafka_connect_hdfs_spark.statedir import hadoop_fs as _snap_fs
 
     fs, Path = _snap_fs(spark, path)
     fs.delete(Path(path + "/_tags/pinned_old.json"), False)

@@ -63,3 +63,41 @@ def test_wap_audit_runs_on_staged_files(spark, sf_dir, tmp_path):
     assert res["published"]
     assert seen["cols"] == set(ev.columns)
     assert seen["files"] >= 1  # real files on disk were read
+
+
+def test_wap_failed_publish_rename_keeps_live_table(spark, tmp_path, monkeypatch):
+    """A publish rename that returns False (rather than raising) must
+    restore the old table and raise — never fall through to deleting
+    the backup, which is the old table's only copy at that point."""
+    import pytest
+
+    from kafka_connect_hdfs_spark import statedir
+
+    path = f"{tmp_path}/t"
+    spark.createDataFrame([(1, "old")], "k long, tag string").write.parquet(path)
+    real = statedir.hadoop_fs
+
+    class _StageRenameFails:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            if src.getName().endswith("__wap_stage"):
+                return False
+            return self._fs.rename(src, dst)
+
+    def failing_fs(spark_, p):
+        fs, Path = real(spark_, p)
+        return _StageRenameFails(fs), Path
+
+    monkeypatch.setattr(statedir, "hadoop_fs", failing_fs)
+    new = spark.createDataFrame([(2, "new")], "k long, tag string")
+    with pytest.raises(IOError, match="publish rename failed"):
+        write_audit_publish(
+            spark, new, path, checks=[("nonempty", lambda d: d.count() > 0)]
+        )
+    monkeypatch.undo()
+    assert [tuple(r) for r in spark.read.parquet(path).collect()] == [(1, "old")]
