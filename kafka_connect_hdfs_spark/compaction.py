@@ -178,7 +178,9 @@ def relayout_partitions(
     readers see the old tree or the new one, never a mix; a crash
     between renames leaves the data intact in the
     ``.<table>__relayout_old`` sibling, and the next call restores it
-    on entry.
+    on entry. A scoped sequence in flight (below) is abandoned: its stage
+    holds slices of the table this rewrite replaces, so it is deleted on
+    entry.
 
     Returns ``{new_leaf_dir: n_files}`` for the rewritten tree.
 
@@ -225,6 +227,11 @@ def relayout_partitions(
     statedir.restore_backup(fs, Path, live_str, old_dir)
     if not fs.exists(root):
         raise FileNotFoundError(table_path)
+    # a scoped sequence in flight staged slices of the table this rewrite
+    # replaces: its stage and done markers are stale from here on
+    stage = Path(f"{parent}/.{leaf}__relayout_stage")
+    if fs.exists(stage):
+        fs.delete(stage, True)
 
     df = spark.read.format(fmt).load(table_path)
     missing = [c for c in new_partition_cols if c not in df.columns]

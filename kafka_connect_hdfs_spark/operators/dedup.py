@@ -478,33 +478,6 @@ def simhash_signatures(
     return hs.select(F.col(id_col), packed.alias("simhash"))
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    max_distance: int = 3,
-    prefix_bits: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance, candidates from equal
-    low-``prefix_bits`` blocks (one rotation — the multi-table generalization
-    is the same plan repeated on rotated signatures).
-
-    Scale: the block-join is an equi-join on a short key; Hamming distance
-    via bit_count(xor) is a codegen-able builtin.
-    """
-    sig = simhash_signatures(df, id_col=id_col, text_col=text_col)
-    block = (F.col("simhash") % F.lit(1 << prefix_bits)).alias("block")
-    a = sig.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"), block)
-    b = sig.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sim_b"), block)
-    return (
-        a.join(b, "block")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
-        .filter(F.col("hamming") <= max_distance)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # duplicate clusters (connected components over candidate pairs)
 

@@ -177,18 +177,16 @@ class TimeBasedPartitioner:
 
     def apply(self, df: DataFrame) -> PartitionSpec:
         floored = self._floored_local()
-        out = df
-        cols: list[str] = []
-        parts: list[Column] = []
-        wanted = {c for c in self.components}
-        for name, fmt in self._COMPONENTS:
-            if name not in wanted:
-                continue
-            out = out.withColumn(name, F.date_format(floored, fmt))
-            cols.append(name)
-            parts.append(F.concat(F.lit(f"{name}="), F.col(name)))
+        formats = {
+            name: F.date_format(floored, fmt)
+            for name, fmt in self._COMPONENTS
+            if name in self.components
+        }
+        # one projection for every component: each withColumn re-analyzes
+        out = df.withColumns(formats)
+        parts = [F.concat(F.lit(f"{name}="), F.col(name)) for name in formats]
         encoded = F.concat_ws("/", *parts)
-        return PartitionSpec(out, cols, encoded)
+        return PartitionSpec(out, list(formats), encoded)
 
 
 class DailyPartitioner(TimeBasedPartitioner):

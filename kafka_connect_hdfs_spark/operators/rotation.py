@@ -86,18 +86,21 @@ def size_based_chunks(
     base = df.withColumn("encodedPartition", encoded_partition)
     key = [F.col(kafka_partition_col), F.col("encodedPartition")]
     w = Window.partitionBy(*key).orderBy(F.col(offset_col))
-    out = base.withColumn("_rn", F.row_number().over(w) - 1).withColumn(
+    rank = F.row_number().over(w) - 1
+    if not discard_partial:
+        # every record is kept: one projection, no helper column
+        return base.withColumn("chunk", (rank / flush_size).cast("bigint"))
+    out = base.withColumn("_rn", rank).withColumn(
         "chunk", (F.col("_rn") / flush_size).cast("bigint")
     )
-    if discard_partial:
-        # a record is in a full chunk iff its rank < floor(group_total /
-        # flush) * flush; the count window shares the row_number window's
-        # partitioning key, so this adds NO second shuffle (plan check:
-        # tests/test_plan_quality.py::test_ingest_single_shuffle)
-        total_w = Window.partitionBy(*key)
-        out = out.withColumn("_total", F.count("*").over(total_w)).filter(
-            F.col("_rn") < F.floor(F.col("_total") / flush_size) * flush_size
-        )
+    # a record is in a full chunk iff its rank < floor(group_total /
+    # flush) * flush; the count window shares the row_number window's
+    # partitioning key, so this adds NO second shuffle (plan check:
+    # tests/test_plan_quality.py::test_ingest_single_shuffle)
+    total_w = Window.partitionBy(*key)
+    out = out.withColumn("_total", F.count("*").over(total_w)).filter(
+        F.col("_rn") < F.floor(F.col("_total") / flush_size) * flush_size
+    )
     return out.drop("_rn", "_total")
 
 

@@ -278,64 +278,6 @@ def with_lsh_bucket(
     return df.withColumn(out_col, bucket)
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    dim: int,
-    k: int = 5,
-    planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: exact cosine ranking *within* the query's LSH
-    bucket. Recall is tunable via ``planes`` (fewer planes → bigger buckets
-    → higher recall, more compute).
-
-    Scale: the cross join becomes an equi-join on bucket — at 100 TB with
-    2^planes buckets the pair space shrinks by ~2^planes; buckets are
-    hash-distributed so the join parallelizes on the bucket key.
-    """
-    from pyspark.sql import Window
-
-    qb = with_lsh_bucket(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
-        dim,
-        planes,
-        vec_col="q_vec",
-    )
-    cb = with_lsh_bucket(
-        fan_out(
-            embeddings.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-            )
-        ),
-        dim,
-        planes,
-        vec_col="c_vec",
-    )
-    sims = (
-        cb.join(broadcast(qb), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                cosine_similarity(
-                    F.col("q_vec").cast("array<double>"),
-                    F.col("c_vec").cast("array<double>"),
-                ),
-                6,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def brute_force_topk_arrow(
     embeddings: DataFrame,
     queries: DataFrame,

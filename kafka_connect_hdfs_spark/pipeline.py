@@ -23,10 +23,15 @@ commit protocol provides the atomicity the WAL provided (W1-W5 — SURVEY.md
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import PySparkException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from kafka_connect_hdfs_spark import statedir
 from kafka_connect_hdfs_spark.config import HdfsSinkConfig
 from kafka_connect_hdfs_spark.operators.partitioners import build_partitioner
 from kafka_connect_hdfs_spark.operators.rotation import chunk_file_manifest, size_based_chunks
@@ -39,8 +44,18 @@ ENVELOPE_COLS = ("topic", "partition", "offset", "timestamp", "key")
 @dataclass
 class IngestResult:
     data: DataFrame          # records that were committed (chunk-complete)
-    manifest: DataFrame      # one row per committed file (W6 contract)
     partition_columns: list[str]
+    topic: str
+    extension: str
+    pad_width: int
+
+    @cached_property
+    def manifest(self) -> DataFrame:
+        """One row per committed file (W6 contract), built on first use:
+        most batches never read it, and every frame costs an analysis."""
+        return chunk_file_manifest(
+            self.data, self.topic, self.extension, pad_width=self.pad_width
+        )
 
 
 def ingest_batch(
@@ -57,17 +72,16 @@ def ingest_batch(
     part = build_partitioner(cfg, ts_col=ts_col)
     spec = part.apply(df)
     flush = cfg.flush_size or 1000
-    sink = build_sink(cfg)
     chunked = size_based_chunks(
         spec.df,
         spec.encoded,
         flush,
         discard_partial=discard_partial,
     )
-    manifest = chunk_file_manifest(
-        chunked, topic, sink.extension, pad_width=cfg.filename_offset_zero_pad_width
+    return IngestResult(
+        chunked, spec.partition_columns, topic, build_sink(cfg).extension,
+        cfg.filename_offset_zero_pad_width,
     )
-    return IngestResult(chunked, manifest, spec.partition_columns)
 
 
 def land(
@@ -84,14 +98,29 @@ def land(
     Directory layout mirrors the reference
     (``<url>/<topics.dir>/<topic>/<encodedPartition>/...``, SURVEY.md §1.3)
     via ``partitionBy`` on the partitioner's columns.
+
+    With ``register_table``, the write itself reports which partition
+    directories it wrote: an ``Observation`` (``collect_set`` over the
+    partition columns, cast to string as ``partitionBy`` names them) rides
+    on the written frame, so learning them costs no job. They go to
+    :func:`register_external_table`, which in steady state only adds them
+    to the catalog (H3); the batch then runs one Spark action, the write.
     """
     res = ingest_batch(df, cfg, topic, ts_col=ts_col, discard_partial=discard_partial)
     sink = build_sink(cfg)
     path = f"{cfg.topics_path}/{topic}"
+    pcols = res.partition_columns
     out = res.data.drop("encodedPartition", "chunk")
-    sink.write(out, path, res.partition_columns)
+    observed = Observation() if register_table and pcols else None
+    if observed is not None:
+        dirs = F.struct(*[F.col(c).cast("string") for c in pcols])
+        out = out.observe(observed, F.collect_set(dirs).alias("dirs"))
+    sink.write(out, path, pcols)
     if register_table:
-        register_external_table(spark, cfg, topic, res.partition_columns, path)
+        written = [tuple(r) for r in observed.get["dirs"]] if observed else []
+        register_external_table(
+            spark, cfg, topic, pcols, path, batch=BatchWrite(out.schema, written)
+        )
     return res
 
 
@@ -204,28 +233,75 @@ def avro_schema_literal(schema, partition_columns: list[str], topic: str) -> str
     return json.dumps(record)
 
 
+class BatchWrite(NamedTuple):
+    """What one ``land`` wrote: the schema of the written frame (payload
+    plus partition columns, as the writer typed them) and the partition
+    directories it wrote, one tuple of the values cast to string per
+    directory (a null or empty value is Spark's default partition)."""
+
+    schema: StructType
+    partitions: list
+
+
+#: table property holding the digest of (format, location, writer schema)
+#: that the table was last fully synced for
+SYNC_PROPERTY = "sink.sync.digest"
+
+#: partition clauses per ``ALTER TABLE ... ADD`` statement
+_ADD_BATCH = 100
+
+
 def register_external_table(
     spark: SparkSession,
     cfg: HdfsSinkConfig,
     topic: str,
     partition_columns: list[str],
     path: str,
+    batch: "BatchWrite | None" = None,
 ) -> None:
-    """H1 + H4 — create the external partitioned table and sync partitions.
+    """H1 + H3 + H4 — keep the external partitioned table in step with
+    what landed under ``path``.
 
     Reference: avro/AvroHiveUtil.constructAvroTable (AvroHiveUtil.java:73-97),
     ParquetHiveUtil.java:61-84; partition registration
-    TopicPartitionWriter.addHivePartition (:787-800) and
-    DataWriter.syncWithHive (:383-420). Spark: CREATE TABLE USING + MSCK.
-    Avro tables carry ``avro.schema.literal`` exactly like the reference's
-    (AvroHiveUtil.java:73-97) — recomputed from the landed files, replaced
-    on every evolution (H2).
-    """
-    from kafka_connect_hdfs_spark.sinks import build_sink
+    TopicPartitionWriter.addHivePartition (:787-800, H3, run when a writer
+    first opens a directory) and DataWriter.syncWithHive (:383-420, H4, run
+    on start).
 
+    Steady state (H3): given ``batch`` — what ``land`` just wrote — and a
+    table whose :data:`SYNC_PROPERTY` matches that write's format, location
+    and writer schema, only the batch's partition directories are added
+    (``ADD IF NOT EXISTS``) and the table refreshed. No schema inference,
+    DROP, CREATE or directory listing; the catalog work follows the batch,
+    not the table's history.
+
+    Full sync (H4), run when the table is missing, was synced for another
+    writer schema (an evolution, H2) or by code that set no digest, when
+    ``batch`` is not given, or when a written value no longer casts to the
+    partition column type inferred at the last sync: infer the landed
+    schema (partition column types as Spark infers them from directory
+    names), DROP + CREATE at the external location with the digest, then
+    register every partition directory under ``path``. Avro tables carry
+    ``avro.schema.literal`` exactly like the reference's
+    (AvroHiveUtil.java:73-97), recomputed from the landed files at every
+    full sync.
+    """
     table = table_name_for_topic(cfg, topic)
-    sink = build_sink(cfg)
-    schema = sink.schema_of(spark, path)
+    digest = None
+    if batch is not None:
+        digest = _sync_digest(cfg, path, batch.schema)
+        if _synced_digest(spark, table) == digest:
+            try:
+                _add_partitions(spark, table, path, partition_columns, batch.partitions)
+            except PySparkException as e:
+                # a value that no longer casts to the inferred partition
+                # type: re-infer the types at a full sync
+                if e.getCondition() != "CAST_INVALID_INPUT":
+                    raise
+            else:
+                spark.catalog.refreshTable(table)
+                return
+    schema = build_sink(cfg).schema_of(spark, path)
     if cfg.format == "avro":
         # partition cols come from dir names, not the container schema
         from pyspark.sql import types as T
@@ -233,9 +309,95 @@ def register_external_table(
         for c in partition_columns:
             if c not in schema.fieldNames():
                 schema = schema.add(T.StructField(c, T.StringType(), True))
+    if batch is not None:
+        # the file the inference sampled may predate this batch, whose
+        # columns are the latest writer schema (H2)
+        for f in batch.schema.fields:
+            if f.name not in schema.fieldNames():
+                schema = schema.add(f)
     _recreate_external_table(
-        spark, cfg, topic, schema, partition_columns, path
+        spark, cfg, topic, schema, partition_columns, path, digest=digest
     )
+
+
+def _sync_digest(cfg: HdfsSinkConfig, path: str, writer_schema) -> str:
+    import hashlib
+    import json
+
+    key = json.dumps([cfg.format, path, writer_schema.jsonValue()], sort_keys=True)
+    return hashlib.sha256(key.encode("utf-8")).hexdigest()
+
+
+def _synced_digest(spark: SparkSession, table: str) -> "str | None":
+    """The table's :data:`SYNC_PROPERTY`, or None when the table is missing.
+    Catalog reads only (no Spark job); a table without the property yields
+    Spark's "does not have property" text, which matches no digest."""
+    if not spark.catalog.tableExists(table):
+        return None
+    return spark.sql(f"SHOW TBLPROPERTIES {table} ('{SYNC_PROPERTY}')").first()["value"]
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a single-quoted Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _add_partitions(
+    spark: SparkSession,
+    table: str,
+    path: str,
+    partition_columns: "list[str]",
+    partitions: list,
+) -> None:
+    """H3 — ``ALTER TABLE ... ADD IF NOT EXISTS PARTITION (...) LOCATION``
+    for each tuple of raw partition values, :data:`_ADD_BATCH` clauses per
+    statement. The one way this module registers a partition: the
+    location is the directory ``partitionBy`` wrote (Spark's own escaping,
+    ``ExternalCatalogUtils.getPartitionPathString``; null and empty values
+    map to ``__HIVE_DEFAULT_PARTITION__``) and the spec gives the raw
+    string, which Spark casts to the column's catalog type (``month='01'``
+    is stored as ``month=1``), so re-adding a directory is a no-op."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    default = f"={utils.DEFAULT_PARTITION_NAME()}"
+    # Hadoop's qualified spelling (``file:/x``, not ``file:///x``), as file
+    # listings produce it: full scans over ``file:///`` partition locations
+    # measured ~10 % slower
+    fs, Path = statedir.hadoop_fs(spark, path)
+    base = fs.makeQualified(Path(path)).toString().rstrip("/")
+    clauses = []
+    for values in partitions:
+        segs = [utils.getPartitionPathString(c, v) for c, v in zip(partition_columns, values)]
+        spec = ", ".join(
+            f"`{c}` = {'NULL' if seg.endswith(default) else _sql_str(v)}"
+            for c, v, seg in zip(partition_columns, values, segs)
+        )
+        location = "/".join([base, *segs])
+        clauses.append(f"PARTITION ({spec}) LOCATION {_sql_str(location)}")
+    for i in range(0, len(clauses), _ADD_BATCH):
+        spark.sql(
+            f"ALTER TABLE {table} ADD IF NOT EXISTS " + " ".join(clauses[i:i + _ADD_BATCH])
+        )
+
+
+def _partition_dirs(spark: SparkSession, path: str, partition_columns: "list[str]") -> list:
+    """Every partition directory under ``path`` (``<col>=<value>`` per
+    level, in ``partition_columns`` order) as a tuple of raw values —
+    the H4 walk (FileUtils.getDirectories, FileUtils.java:151-176), one
+    listing per directory through ``statedir.hadoop_fs``."""
+    fs, Path = statedir.hadoop_fs(spark, path)
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    level = [((), Path(path))] if fs.exists(Path(path)) else []
+    for c in partition_columns:
+        prefix = f"{utils.escapePathName(c)}="
+        below = []
+        for values, parent in level:
+            for st in fs.listStatus(parent):
+                name = st.getPath().getName()
+                if st.isDirectory() and name.startswith(prefix):
+                    value = utils.unescapePathName(name[len(prefix):])
+                    below.append((values + (value,), st.getPath()))
+        level = below
+    return [values for values, _ in level]
 
 
 def _recreate_external_table(
@@ -245,13 +407,16 @@ def _recreate_external_table(
     schema,
     partition_columns: "list[str]",
     path: str,
+    digest: "str | None" = None,
 ) -> None:
-    """The shared Hive DDL tail (H1 create + H2 replace): render the
-    column list (data columns first, partition columns last — Spark's
+    """The shared Hive DDL tail (H1 create + H2 replace + H4 sync): render
+    the column list (data columns first, partition columns last — Spark's
     table layout rule; USING syntax lists every column once,
     PARTITIONED BY takes names only), DROP + CREATE at the external
-    location, MSCK-sync partitions. One definition so the H1 and H2
-    paths can never produce divergent catalog tables (r07 review)."""
+    location (with ``digest`` as :data:`SYNC_PROPERTY` when given), then
+    register every partition directory under ``path`` through
+    :func:`_add_partitions`. One definition so the H1 and H2 paths can
+    never produce divergent catalog tables (r07 review)."""
     table = table_name_for_topic(cfg, topic)
     ordered = [f for f in schema.fields if f.name not in partition_columns] + [
         f for f in schema.fields if f.name in partition_columns
@@ -262,22 +427,27 @@ def _recreate_external_table(
         "parquet": "PARQUET", "orc": "ORC", "avro": "AVRO",
         "json": "JSON", "text": "TEXT",
     }[cfg.format]
-    props = ""
+    props = {}
     if cfg.format == "avro":
-        literal = avro_schema_literal(schema, partition_columns, topic)
-        props = (
-            " TBLPROPERTIES ('avro.schema.literal' = '"
-            + literal.replace("'", "\\'")
-            + "')"
-        )
+        props["avro.schema.literal"] = avro_schema_literal(schema, partition_columns, topic)
+    if digest is not None:
+        props[SYNC_PROPERTY] = digest
+    props_sql = ""
+    if props:
+        props_sql = " TBLPROPERTIES (" + ", ".join(
+            f"{_sql_str(k)} = {_sql_str(v)}" for k, v in props.items()
+        ) + ")"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     partitioned = f" PARTITIONED BY ({part_sql})" if part_sql else ""
     spark.sql(
         f"CREATE TABLE {table} ({cols_sql}) USING {fmt}{partitioned}"
-        f"{props} LOCATION '{path}'"
+        f"{props_sql} LOCATION {_sql_str(path)}"
     )
     if partition_columns:
-        spark.sql(f"MSCK REPAIR TABLE {table}")  # H4 sync
+        _add_partitions(
+            spark, table, path, partition_columns,
+            _partition_dirs(spark, path, partition_columns),
+        )
 
 
 def alter_table_schema(
@@ -330,7 +500,7 @@ def replace_table_schema(
     COLUMNS``). Spark SQL has no REPLACE COLUMNS for v1 external tables,
     but for an EXTERNAL location the column list is pure catalog metadata
     — so the equivalent is re-registering the table at the same location
-    with the new list (DROP + CREATE + MSCK, which
+    with the new list (DROP + CREATE + partition registration, which
     :func:`register_external_table`'s create path already performs
     atomically enough for a single-writer catalog). Data files are
     untouched; columns absent from the new list become invisible, columns
@@ -368,12 +538,6 @@ def replace_table_schema(
     _recreate_external_table(
         spark, cfg, topic, T.StructType(fields), partition_columns, path
     )
-
-
-def add_partition(spark: SparkSession, cfg: HdfsSinkConfig, topic: str, spec: str) -> None:
-    """H3 — ALTER TABLE ADD IF NOT EXISTS PARTITION (addHivePartition :787-800)."""
-    table = table_name_for_topic(cfg, topic)
-    spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({spec})")
 
 
 def table_name_for_topic(cfg: HdfsSinkConfig, topic: str) -> str:

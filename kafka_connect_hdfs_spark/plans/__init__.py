@@ -5,31 +5,3 @@ in Hive over the tables it maintains (docs/hdfs_connector.rst:192-200). In the
 rebuild that surface is Spark SQL; this package holds the representative
 analytical plans the driver verifies against DuckDB.
 """
-
-
-def oracle_dec_double(x: str) -> str:
-    """DuckDB text mirror of functions.dec_as_double for a DECIMAL-typed
-    expression ``x`` (CTE alias, windowed sum, ...): exact micro-units
-    (integral because every repo decimal has scale <= 6), hi/lo 2**50
-    split (each sub-cast exact, < 2**53), divide back by 1e6 — the same
-    IEEE ops Spark runs, because DuckDB's native DECIMAL/HUGEINT->DOUBLE
-    cast is not correctly rounded past 2**53 scaled units. Bit-identical
-    to the native cast below 2**53, so recorded gate hashes are
-    unchanged at bench sf.
-
-    The HI limb uses the NESTED 2**100/2**50 reconstruction (r09 — the
-    flat form's hi cast re-enters the miscast band past ~2**103
-    micro-units). The plan oracles materialized in analytics3/4 before
-    r09 keep the flat form: money micro-units reach 2**103 only at
-    ~$10**31 of summed revenue, and below that bound the two forms are
-    bit-identical, so the recorded texts stay byte-valid.
-    """
-    u = f"CAST(CAST(({x}) AS DECIMAL(38,6)) * 1000000 AS HUGEINT)"
-    p = "1125899906842624"
-    p100 = str(1 << 100)
-    return (
-        f"(CASE WHEN ({x}) < 0 THEN -1.0 ELSE 1.0 END * "
-        f"((CAST(abs({u}) // {p100} AS DOUBLE) * {p}.0 "
-        f"+ CAST((abs({u}) % {p100}) // {p} AS DOUBLE)) * {p}.0 "
-        f"+ CAST(abs({u}) % {p} AS DOUBLE)) / 1000000.0)"
-    )

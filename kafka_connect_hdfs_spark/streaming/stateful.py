@@ -147,11 +147,13 @@ def stop_after_drain(q, timeout: float = 300.0) -> None:
     drained. The microbatch engine keeps scheduling ~1 s empty batches
     until state timers fire (which for 30-min session timers is never
     inside a test/gate run), so ``awaitTermination`` would burn the full
-    ``timeout`` on no-op batches. The first COMPLETED zero-row batch
-    after data has been seen proves no further batch can emit a row —
-    stop there. Scans recentProgress past the last-seen batchId (not just
-    lastProgress) so a data batch overwritten by a following empty batch
-    between polls is never missed (ADVICE r13).
+    ``timeout`` on no-op batches. Two COMPLETED zero-row batches in a
+    row after data has been seen mean the source is drained — stop
+    there. One is not enough: a rate-limited or slow-listing source can
+    yield a transient empty batch mid-drain, and stopping on it would
+    drop the tail. Scans recentProgress past the last-seen batchId (not
+    just lastProgress) so a data batch overwritten by a following empty
+    batch between polls is never missed (ADVICE r13).
 
     Safe ONLY for processing-time-timeout pipelines where no timer can
     fire inside the run; watermark/append queries emit final windows from
@@ -161,20 +163,18 @@ def stop_after_drain(q, timeout: float = 300.0) -> None:
 
     deadline = _time.time() + timeout
     data_seen = False
+    empties = 0  # zero-row batches in a row since the last data batch
     last_batch = -1
-    while _time.time() < deadline:
+    while _time.time() < deadline and empties < 2:
         if q.awaitTermination(2):
             break
-        done = False
         for rp in q.recentProgress:
             if rp is None or rp["batchId"] <= last_batch:
                 continue
             last_batch = rp["batchId"]
             if rp["numInputRows"] > 0:
-                data_seen = True
+                data_seen, empties = True, 0
             elif data_seen:
-                done = True  # source exhausted; only timer no-ops remain
-        if done:
-            break
+                empties += 1
     if q.isActive:
         q.stop()

@@ -29,3 +29,18 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def spark_global(spark):
     return spark
+
+
+@pytest.fixture()
+def last_job(spark):
+    """``last_job()`` is the id of the newest Spark job once the listener
+    bus has drained (-1 before any job); the difference of two calls is
+    the number of jobs run in between."""
+    sc = spark._jsc.sc()
+
+    def newest() -> int:
+        sc.listenerBus().waitUntilEmpty()
+        listed = sc.statusStore().jobsList(None)
+        return listed.apply(0).jobId() if listed.size() else -1
+
+    return newest

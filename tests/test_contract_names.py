@@ -188,7 +188,9 @@ def test_split_chunk_raises(spark, records, tmp_path):
 
 
 @pytest.mark.parametrize("fmt,jobs", [("avro", 3), ("parquet", 2)])
-def test_contract_land_job_count(spark, records, tmp_path, monkeypatch, fmt, jobs):
+def test_contract_land_job_count(
+    spark, records, tmp_path, monkeypatch, last_job, fmt, jobs
+):
     """One contract-named batch is one pass: the chunk window's shuffle,
     the write (the Avro fallback adds its partition-dir repartition), and
     no job that re-runs the assignment to collect a manifest."""
@@ -196,13 +198,6 @@ def test_contract_land_job_count(spark, records, tmp_path, monkeypatch, fmt, job
 
     if fmt == "avro" and jvm_avro_available(spark):
         pytest.skip("JVM avro datasource present: the Parquet-like path runs")
-    sc = spark._jsc.sc()
-
-    def last_job():
-        sc.listenerBus().waitUntilEmpty()
-        listed = sc.statusStore().jobsList(None)
-        return listed.apply(0).jobId() if listed.size() else -1
-
     collected = []
     frame_cls = type(records)  # the concrete (classic) DataFrame class
     collect = frame_cls.collect

@@ -421,6 +421,30 @@ def test_relayout_scoped_unknown_leaf_raises(spark, tmp_path):
         relayout_partitions(spark, path, ["day"], scope=["event_type=nope"])
 
 
+def test_relayout_global_drops_stale_scoped_stage(spark, tmp_path):
+    """A global relayout in the middle of a scoped sequence replaces the
+    table the stage was built from: a later scoped sequence over the new
+    layout starts afresh and cuts over to exactly the table's rows."""
+    from kafka_connect_hdfs_spark.compaction import relayout_partitions
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, f"a{i % 2}", f"b{i % 3}", f"c{i % 2}") for i in range(12)],
+        "id long, a string, b string, c string",
+    )
+    df.write.partitionBy("a").parquet(path)
+    assert relayout_partitions(spark, path, ["b"], scope=["a=a0"]) == {}
+    assert set(relayout_partitions(spark, path, ["b"])) == {"b=b0", "b=b1", "b=b2"}
+    assert not (tmp_path / ".t__relayout_stage").exists()
+
+    for leaf in ("b=b0", "b=b1"):
+        assert relayout_partitions(spark, path, ["c"], scope=[leaf]) == {}
+    out = relayout_partitions(spark, path, ["c"], scope=["b=b2"])
+    assert set(out) == {"c=c0", "c=c1"}
+    back = spark.read.parquet(path).select("id", "a", "b", "c")
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
 def test_relayout_scoped_purges_crashed_half_move(spark, tmp_path):
     """A crash after SOME files moved into the stage but before the done
     marker: restart must purge the half-moved prefix files and redo the

@@ -128,3 +128,38 @@ def test_streaming_builtin_session_window_matches_batch(spark, sf_dir, tmp_path)
     assert got, "no sessions emitted"
     for key, val in got.items():
         assert batch[key] == val, (key, val, batch[key])
+
+
+class _FakeQuery:
+    """A query whose recentProgress grows by one poll's worth of batches
+    (each a numInputRows) per ``awaitTermination`` call."""
+
+    def __init__(self, polls):
+        self.polls, self.progress, self.isActive = list(polls), [], True
+        self.stopped_after = None
+
+    def awaitTermination(self, _timeout):
+        if self.polls:
+            for rows in self.polls.pop(0):
+                self.progress.append({"batchId": len(self.progress), "numInputRows": rows})
+        return False
+
+    @property
+    def recentProgress(self):
+        return list(self.progress)
+
+    def stop(self):
+        self.isActive, self.stopped_after = False, len(self.progress)
+
+
+def test_stop_after_drain_outlasts_one_empty_batch_mid_drain():
+    """A lone empty batch between data batches (a rate-limited source) is
+    not the end: the query is stopped after two empty batches in a row."""
+    from kafka_connect_hdfs_spark.streaming.stateful import stop_after_drain
+
+    q = _FakeQuery([[5, 0], [7], [0], [0], [0]])
+    stop_after_drain(q, timeout=30)
+    assert q.stopped_after == 5  # data, empty, data, empty, empty
+    q = _FakeQuery([[0, 0, 4, 0, 0, 0]])  # empties before any data do not count
+    stop_after_drain(q, timeout=30)
+    assert q.stopped_after == 6
