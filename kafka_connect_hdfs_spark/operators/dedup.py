@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kafka_connect_hdfs_spark.functions import fan_out
+from kafka_connect_hdfs_spark.operators.iterate import fixpoint, materialized
 
 
 def _norm_text(text_col: str) -> F.Column:
@@ -532,8 +533,6 @@ def duplicate_clusters(
         edges.select(F.col("src").alias("node")).distinct()
         .withColumn("cluster_id", F.col("node"))
     )
-    edges = edges.localCheckpoint(eager=True)
-    labels = labels.localCheckpoint(eager=True)
 
     # Convergence by ONE aggregate on the label table per round instead of
     # an old⋈new join + count (a |nodes| shuffle per iteration). Labels only
@@ -553,40 +552,31 @@ def duplicate_clusters(
         _id_t, (ByteType, ShortType, IntegerType, LongType)
     ) or (isinstance(_id_t, DecimalType) and _id_t.scale == 0)
 
-    def _label_sig(lab: DataFrame) -> tuple:
-        if _numeric:
-            row = lab.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("cluster_id").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-            return (row["n"], row["s"])
-        row = lab.agg(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("node", "cluster_id")).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
+    witness = (
+        F.sum(F.col("cluster_id").cast("decimal(38,0)")) if _numeric
+        else F.bit_xor(F.xxhash64("node", "cluster_id"))
+    )
 
-    sig = _label_sig(labels)
-    for _ in range(max_iter):
+    def _label_sig(lab: DataFrame) -> tuple:
+        return tuple(lab.agg(F.count("*"), witness).first())
+
+    def _round(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src")
             .agg(F.min("cluster_id").alias("n_min"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("n_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-        ).localCheckpoint(eager=True)
-        labels = new_labels
-        new_sig = _label_sig(labels)
-        if new_sig == sig:
-            break
-        sig = new_sig
+        return labels.join(
+            neighbor_min, labels.node == neighbor_min.src, "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("cluster_id"), F.coalesce("n_min", F.col("cluster_id"))
+            ).alias("cluster_id"),
+        )
+
+    with materialized(edges) as edges:
+        labels = fixpoint(_round, labels, _label_sig, max_iter)
     return labels.select("node", "cluster_id")
 
 
@@ -925,7 +915,7 @@ def prefix_filtered_jaccard_pairs(
     )
     # NOTE: docsets has three consumers (prefix extraction + both verify
     # sides). Measured at sf0.1: recomputing the 2-shuffle lineage per
-    # consumer beats localCheckpoint materialization (4.4 s vs 7.2 s —
+    # consumer beats materializing it (4.4 s vs 7.2 s —
     # array serialization dominates); at 100 TB persist the docset table
     # explicitly between stages instead.
     prefix_len = (

@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_hdfs_spark.operators.dedup import with_shingles
+from kafka_connect_hdfs_spark.operators.iterate import (
+    fixpoint, materialize, materialized, release,
+)
 
 
 def _capped_group_shingles(
@@ -279,8 +282,7 @@ def connected_components_star(
     distinct sets + empty anti ⇒ set equality) — replacing the old
     second full contraction round (3 more |E| shuffles) with one
     O(nodes) probe, and upgrading the stop condition from probabilistic
-    (hash) to exact. ``localCheckpoint`` truncates lineage per round as
-    in duplicate_clusters.
+    (hash) to exact. The rounds run under :func:`iterate.fixpoint`.
 
     Equivalence with duplicate_clusters is pytest-gated on random graphs
     and on the chain topology where propagation is at its worst.
@@ -290,24 +292,14 @@ def connected_components_star(
     # convergence signature, and the self-pair restore below all derive
     # from it, and `pairs` is typically an expensive generated frame
     # (LSH / Jaccard candidate pipelines) that must not be recomputed
-    uv = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint(eager=True)
-    e = (
-        uv.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    uv = materialize(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     )
 
     def _sig(edges: DataFrame) -> tuple:
-        row = edges.agg(
-            F.count("*").alias("n"),
-            # bit_xor: order-free and overflow-free under ANSI mode
-            F.bit_xor(
-                F.xxhash64(F.least("u", "v"), F.greatest("u", "v"))
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
+        # bit_xor: order-free and overflow-free under ANSI mode
+        h = F.bit_xor(F.xxhash64(F.least("u", "v"), F.greatest("u", "v")))
+        return tuple(edges.agg(F.count("*"), h).first())
 
     _w_center = Window.partitionBy("u")
 
@@ -348,21 +340,16 @@ def connected_components_star(
             .distinct()
         )
 
-    sig = _sig(e)
-    for _ in range(max_rounds):
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        new_sig = _sig(new_e)
-        if new_sig == sig:
-            # counts match (from the signature) and both sides are
-            # distinct sets, so one empty left-anti join PROVES set
-            # equality — an exact fixed-point witness for the price of a
-            # star-forest probe, where the old code paid a second full
-            # contraction round to re-check the hash
-            if new_e.join(e, ["u", "v"], "left_anti").isEmpty():
-                e = new_e
-                break
-        sig = new_sig
-        e = new_e
+    # on equal signatures the counts match and both sides are distinct
+    # sets, so one empty left-anti join PROVES set equality — an exact
+    # fixed-point witness for the price of a star-forest probe
+    e = fixpoint(
+        lambda edges: _small_star(_large_star(edges)),
+        uv.filter(F.col("u") != F.col("v")).distinct(),
+        _sig,
+        max_rounds,
+        confirm=lambda new, old: new.join(old, ["u", "v"], "left_anti").isEmpty(),
+    )
     # converged graph is a union of stars centered at component minima:
     # every node's label is its minimum incident endpoint (or itself)
     sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -382,6 +369,7 @@ def connected_components_star(
         .distinct()
     )
     if self_nodes.isEmpty():
+        release(uv)
         return labels
     missing = self_nodes.join(labels, "node", "left_anti")
     return labels.unionByName(
@@ -389,24 +377,11 @@ def connected_components_star(
     )
 
 
-def triangle_count(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Global triangle count of an undirected graph → one row
-    ``(n_triangles)``. Triangle density separates organic neighborhoods
-    from farmed link/co-visitation structures (spam rings are near-cliques;
-    crawl mirrors triangulate heavily), the classic graph-QA scalar.
-
-    Scale — DEGREE orientation (Cohen 2009 / Suri & Vassilvitskii WWW'11):
-    each undirected edge is oriented from its (degree, id)-lower endpoint
-    to the higher one, so every node's OUT-degree is bounded (a hub of
-    degree d contributes wedges only through its ~sqrt-bounded lower-degree
-    neighbors), making the wedge join O(m^{3/2}) worst case instead of
-    Σdeg² — the hub-skew guard. Each triangle is counted exactly once
-    (its orientation is acyclic). Three joins on node keys, one count.
-    """
+def _triangles(pairs: DataFrame, id_a: str, id_b: str) -> "tuple[DataFrame, DataFrame]":
+    """The degree-oriented wedge join shared by :func:`triangle_count` and
+    :func:`clustering_coefficients`: ``(deg, tri)`` with ``deg`` =
+    ``(u, d)`` over the undirected simple graph and ``tri`` = ``(a, b, c)``,
+    each triangle once."""
     e = (
         pairs.select(
             F.least(F.col(id_a), F.col(id_b)).alias("u"),
@@ -434,11 +409,33 @@ def triangle_count(
         F.col("e1.v").alias("b"),
         F.col("e2.v").alias("c"),
     )
-    closed = wedge.join(
+    return deg, wedge.join(
         oriented.select(F.col("u").alias("a"), F.col("v").alias("c")),
         ["a", "c"],
+    ).select("a", "b", "c")
+
+
+def triangle_count(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+) -> DataFrame:
+    """Global triangle count of an undirected graph → one row
+    ``(n_triangles)``. Triangle density separates organic neighborhoods
+    from farmed link/co-visitation structures (spam rings are near-cliques;
+    crawl mirrors triangulate heavily), the classic graph-QA scalar.
+
+    Scale — DEGREE orientation (Cohen 2009 / Suri & Vassilvitskii WWW'11):
+    each undirected edge is oriented from its (degree, id)-lower endpoint
+    to the higher one, so every node's OUT-degree is bounded (a hub of
+    degree d contributes wedges only through its ~sqrt-bounded lower-degree
+    neighbors), making the wedge join O(m^{3/2}) worst case instead of
+    Σdeg² — the hub-skew guard. Each triangle is counted exactly once
+    (its orientation is acyclic). Three joins on node keys, one count.
+    """
+    return _triangles(pairs, id_a, id_b)[1].agg(
+        F.count("*").alias("n_triangles")
     )
-    return closed.agg(F.count("*").alias("n_triangles"))
 
 
 def clustering_coefficients(
@@ -464,37 +461,7 @@ def clustering_coefficients(
     """
     from kafka_connect_hdfs_spark.operators.similarity import q6_col
 
-    e = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("u"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-    with_deg = (
-        sym.join(deg.select(F.col("u"), F.col("d").alias("du")), "u")
-        .join(
-            deg.select(F.col("u").alias("v"), F.col("d").alias("dv")), "v"
-        )
-    )
-    oriented = with_deg.filter(
-        (F.col("du") < F.col("dv"))
-        | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
-    ).select("u", "v")
-    wedge = oriented.alias("e1").join(
-        oriented.alias("e2"), F.col("e1.v") == F.col("e2.u")
-    ).select(
-        F.col("e1.u").alias("a"),
-        F.col("e1.v").alias("b"),
-        F.col("e2.v").alias("c"),
-    )
-    tri = wedge.join(
-        oriented.select(F.col("u").alias("a"), F.col("v").alias("c")),
-        ["a", "c"],
-    ).select("a", "b", "c")
+    deg, tri = _triangles(pairs, id_a, id_b)
     per_node = (
         tri.select(F.col("a").alias("node"))
         .unionByName(tri.select(F.col("b").alias("node")))
@@ -581,48 +548,37 @@ def kcore_decompose(
     linked documents fall out early (Seidman 1983; Batagelj–Zaveršnik).
 
     Scale: each round is one degree aggregation (|nodes|-bounded, map-side
-    partial) + one semi-join filter of the edge list on surviving nodes —
-    the same primitives as PageRank rounds, never edge×edge.
-    ``localCheckpoint`` truncates lineage per round; peeling converges in
-    at most diameter-ish rounds and ``max_rounds`` bounds pathology
-    (real corpus graphs peel in < 10). Convergence is EXACT: the node
-    count is strictly decreasing, so equality means a fixed point —
-    no signature hashing needed.
+    partial) + two semi-join filters of the edge list on surviving nodes —
+    the same primitives as PageRank rounds, never edge×edge. The rounds
+    run under :func:`iterate.fixpoint`; peeling converges in at most
+    diameter-ish rounds and ``max_rounds`` bounds pathology (real corpus
+    graphs peel in < 10). Convergence is EXACT: a round only removes
+    edges, so an unchanged edge count means a fixed point — no signature
+    hashing needed.
     """
     e = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    prev_nodes = None
-    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
-    for _ in range(max_rounds):
-        # checkpoint FIRST, then count the checkpointed frame: the old
-        # count()-then-checkpoint order ran the degree aggregation TWICE
-        # per round (once for the convergence count, once to materialize
-        # keep) — counting cached partitions is a near-free job (§1.2
-        # "don't compute things you throw away")
+
+    def _peel(sym: DataFrame) -> DataFrame:
         keep = (
-            deg.filter(F.col("d") >= k)
+            sym.groupBy("u").agg(F.count("*").alias("d"))
+            .filter(F.col("d") >= k)
             .select("u")
-            .localCheckpoint(eager=True)
         )
-        n_keep = keep.count()
-        if prev_nodes is not None and n_keep == prev_nodes:
-            break
-        prev_nodes = n_keep
-        if n_keep == 0:
-            break
-        sym = (
-            sym.join(keep, "u")
-            .join(keep.select(F.col("u").alias("v")), "v")
-            .localCheckpoint(eager=True)
+        return sym.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-        deg = sym.groupBy("u").agg(F.count("*").alias("d"))
+
+    sym = fixpoint(
+        _peel,
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
+        None,
+        max_rounds,
+    )
+    deg = sym.groupBy("u").agg(F.count("*").alias("d"))
     return deg.filter(F.col("d") >= k).select(
         F.col("u").alias("node"), F.col("d").alias("core_degree")
     )
@@ -649,9 +605,9 @@ def label_propagation_communities(
 
     Scale: per round one |edges|-shuffle groupBy (node, label) with
     map-side partial counts, then one |nodes|-bounded max-of-struct agg —
-    no window functions, no edge×edge joins. The label frame is
-    ``localCheckpoint``-ed per round to truncate lineage (the
-    duplicate_clusters precedent). Fixed round count (LPA in practice
+    no window functions, no edge×edge joins. The symmetrized edge list
+    is materialized for the sweeps and released once the final labels
+    are. Fixed round count (LPA in practice
     stabilizes in < 5 sweeps; Raghavan §4) keeps the cost bounded and the
     semantics oracle-able.
     """
@@ -663,38 +619,38 @@ def label_propagation_communities(
     # one materialization: sym feeds every sweep (and the node set); the
     # label frame itself is consumed once per round, so the whole fixed-
     # iteration loop stays ONE query — no per-round checkpoint jobs
-    sym = e.unionByName(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    labels = sym.select("u").distinct().select("u", F.col("u").alias("lbl"))
-    for _ in range(iterations):
-        nbr = sym.join(
-            labels.select(F.col("u").alias("v"), "lbl"), "v"
-        ).select("u", "lbl")
-        # ONE u-keyed exchange per sweep instead of two: HashPartitioning(u)
-        # satisfies the clustering required by BOTH the (u, lbl) count and
-        # the (u) argmax, so repartitioning the neighbor stream by u lets
-        # the two aggregations fuse into a single shuffle (§2.4 — the same
-        # shared-exchange trick as the star kernel's window min); the old
-        # shape exchanged partial (u, lbl) counts and then re-exchanged
-        # them by u
-        counts = nbr.repartition("u").groupBy("u", "lbl").agg(
-            F.count("*").alias("c")
-        )
-        # argmax by (count DESC, label ASC) as one min-of-struct agg:
-        # (-c, lbl) — the COUNT is negated (always numeric), not the
-        # label, so string/any-type node ids order by their natural ASC
-        # (the old (c, -lbl) form failed under ANSI for string ids —
-        # ADVICE r04). Every node in sym has >= 1 neighbor (symmetrized,
-        # self-pairs dropped), so this covers the full node set — no
-        # isolated-node restore join is needed.
-        labels = counts.groupBy("u").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), F.col("lbl"))).alias(
-                "m"
+    with materialized(
+        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    ) as sym:
+        labels = sym.select("u").distinct().select("u", F.col("u").alias("lbl"))
+        for _ in range(iterations):
+            nbr = sym.join(
+                labels.select(F.col("u").alias("v"), "lbl"), "v"
+            ).select("u", "lbl")
+            # ONE u-keyed exchange per sweep instead of two: HashPartitioning(u)
+            # satisfies the clustering required by BOTH the (u, lbl) count and
+            # the (u) argmax, so repartitioning the neighbor stream by u lets
+            # the two aggregations fuse into a single shuffle (§2.4 — the same
+            # shared-exchange trick as the star kernel's window min); the old
+            # shape exchanged partial (u, lbl) counts and then re-exchanged
+            # them by u
+            counts = nbr.repartition("u").groupBy("u", "lbl").agg(
+                F.count("*").alias("c")
             )
-        ).select("u", F.col("m.lbl").alias("lbl"))
-    # final labels feed two consumers (sizes + join) — materialize once
-    labels = labels.localCheckpoint(eager=True)
+            # argmax by (count DESC, label ASC) as one min-of-struct agg:
+            # (-c, lbl) — the COUNT is negated (always numeric), not the
+            # label, so string/any-type node ids order by their natural ASC
+            # (the old (c, -lbl) form failed under ANSI for string ids —
+            # ADVICE r04). Every node in sym has >= 1 neighbor (symmetrized,
+            # self-pairs dropped), so this covers the full node set — no
+            # isolated-node restore join is needed.
+            labels = counts.groupBy("u").agg(
+                F.min(F.struct((-F.col("c")).alias("nc"), F.col("lbl"))).alias(
+                    "m"
+                )
+            ).select("u", F.col("m.lbl").alias("lbl"))
+        # final labels feed two consumers (sizes + join) — materialize once
+        labels = materialize(labels)
     sizes = labels.groupBy("lbl").agg(F.count("*").alias("n_members"))
     return labels.join(sizes, "lbl").select(
         F.col("u").alias("node"),
@@ -724,13 +680,10 @@ def modularity_report(
     broadcast row.
     """
     a, b = F.col(id_a), F.col(id_b)
-    e = (
-        pairs.select(
-            F.least(a, b).alias("u"), F.greatest(a, b).alias("v")
-        )
+    e = materialize(
+        pairs.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     m = e.agg(F.count("*").cast("double").alias("m"))
     sym = e.unionByName(
@@ -970,30 +923,28 @@ def bfs_distances(
     join from the current frontier plus a min-aggregate; the frontier
     only carries nodes whose distance improved, so rounds shrink as the
     BFS saturates. ``max_hops`` bounds the job count (fixed small
-    constant), and the symmetrized edge list is materialized once.
+    constant), and the symmetrized edge list is materialized once and
+    released on return (the result unions only the materialized frontiers).
     """
-    sym = edges.select(
-        F.col(src).alias("_u"), F.col(dst).alias("_v")
-    ).unionByName(
-        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-    ).distinct().localCheckpoint(eager=True)
-
     dist = sources.select(
         F.col(node_col).alias("_n"), F.lit(0).alias("dist")
     ).distinct()
-    frontier = dist
-    for hop in range(1, max_hops + 1):
-        reached = (
-            frontier.join(sym, frontier["_n"] == sym["_u"])
-            .select(F.col("_v").alias("_n"), F.lit(hop).alias("dist"))
-            .distinct()
-        )
-        # keep only genuinely-new nodes: anti-join against settled set
-        new = reached.join(dist.select("_n"), "_n", "anti").localCheckpoint(
-            eager=True
-        )
-        dist = dist.unionByName(new)
-        frontier = new
+    with materialized(
+        edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+        .unionByName(edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v")))
+        .distinct()
+    ) as sym:
+        frontier = dist
+        for hop in range(1, max_hops + 1):
+            reached = (
+                frontier.join(sym, frontier["_n"] == sym["_u"])
+                .select(F.col("_v").alias("_n"), F.lit(hop).alias("dist"))
+                .distinct()
+            )
+            # keep only genuinely-new nodes: anti-join against settled set
+            new = materialize(reached.join(dist.select("_n"), "_n", "anti"))
+            dist = dist.unionByName(new)
+            frontier = new
     return dist.select(F.col("_n").alias(node_col), "dist").orderBy(
         node_col
     )
@@ -1018,15 +969,8 @@ def link_prediction(
     are dropped from the wedge middle first (a hub manufactures
     quadratically many meaningless candidates — same hygiene as
     covisit_edges' cell cap). Existing edges leave via one anti-join.
-
-    Eager-materialization contract (ADVICE r13): building the plan
-    ``localCheckpoint(eager=True)``s the |E|-bounded edge list — work
-    runs at CONSTRUCTION time and the checkpointed RDD stays persisted
-    for the session. Long-lived callers composing many operator calls
-    should clear persisted RDDs between batches (what bench.py's
-    ``_clear_persisted`` does); the checkpoint cannot be scoped to the
-    returned plan's lifetime because Spark offers no
-    unpersist-on-consume hook.
+    Building the plan materializes the |E|-bounded edge list
+    (:mod:`iterate`), which the returned plan reads.
     """
     # materialized ONCE: sym feeds three differently-partitioned consumers
     # (wedge left side keyed on _v, wedge right side keyed on _u, the
@@ -1034,11 +978,11 @@ def link_prediction(
     # lazy, each partitioning re-derives the full upstream edge pipeline
     # (measured 7.6-11.6 s -> 4.2-4.9 s at sf0.1 on the covisit graph;
     # guide §5: cache exactly when reuse beats recompute)
-    sym = edges.select(
-        F.col(src).alias("_u"), F.col(dst).alias("_v")
-    ).unionByName(
-        edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v"))
-    ).distinct().localCheckpoint(eager=True)
+    sym = materialize(
+        edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+        .unionByName(edges.select(F.col(dst).alias("_u"), F.col(src).alias("_v")))
+        .distinct()
+    )
     deg = sym.groupBy("_u").agg(F.count("*").alias("_deg"))
     mid_ok = deg.filter(F.col("_deg") <= max_degree).select(
         F.col("_u").alias("_m")

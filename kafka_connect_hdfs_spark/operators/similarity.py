@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from kafka_connect_hdfs_spark.functions import fan_out
+from kafka_connect_hdfs_spark.operators.iterate import materialize
 
 
 def _dot(a: F.Column, b: F.Column) -> F.Column:
@@ -549,9 +550,9 @@ def ivf_probe_sweep(
 
     Scale: corpus vectors carry one map-side cell id (no shuffle — the
     literal-seed kernel); only the query side fans out ×max(probes). The
-    scored candidate frame and the exact top-k are ``localCheckpoint``-ed
-    because every probe level re-reads them — without it each union
-    branch would re-run the candidate join and the exact scan.
+    scored candidate frame and the exact top-k are materialized
+    (:mod:`iterate`) because every probe level re-reads them — without it
+    each union branch would re-run the candidate join and the exact scan.
     """
     from pyspark.sql import Window
 
@@ -572,7 +573,7 @@ def ivf_probe_sweep(
         F.col(vec_col).alias("c_vec"),
         "cell",
     )
-    scored = (
+    scored = materialize(
         c.join(broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -587,12 +588,10 @@ def ivf_probe_sweep(
                 6,
             ).alias("cosine"),
         )
-        .localCheckpoint(eager=True)
     )
-    exact = (
+    exact = materialize(
         brute_force_topk(embeddings, queries, k=k, id_col=id_col, vec_col=vec_col)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     totals = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
     w = Window.partitionBy("query_id").orderBy(
@@ -2714,12 +2713,9 @@ def knn_graph_refine(
     (≤ k²·n candidate id pairs, vectors NOT carried); candidate pairs
     dedup BEFORE the vectors join back (two hash joins on id), and the
     re-rank is a cell-free per-src window over ≤ k+k² rows per vector.
-    Rounds compose — call again for round two.
-
-    Eager-materialization contract (ADVICE r13): plan construction
-    ``localCheckpoint(eager=True)``s the ≤ k·n id-pair edge list, which
-    stays persisted for the session; long-lived callers should clear
-    persisted RDDs between batches (bench.py's ``_clear_persisted``).
+    Rounds compose — call again for round two. Building the plan
+    materializes the ≤ k·n id-pair edge list (:mod:`iterate`), which the
+    returned plan reads.
     """
     from pyspark.sql import Window
 
@@ -2728,7 +2724,7 @@ def knn_graph_refine(
     # left lazy each re-derives the full kNN-build upstream (the
     # link_prediction lesson); one eager materialization of ≤ k·n id
     # pairs caps that at a single computation
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = materialize(edges.select("src", "dst"))
     # two-hop: src -> mid -> dst (skip self), plus the original edges
     two_hop = (
         e.alias("e1")

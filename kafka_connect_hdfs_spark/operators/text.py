@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_hdfs_spark.functions import fan_out
+from kafka_connect_hdfs_spark.operators.iterate import materialize, materialized
 
 # Tiny per-language stopword marker sets for the heuristic lang scorer.
 # (Public common stopwords; the point is the *operator shape* — per-language
@@ -1802,61 +1803,60 @@ def unigram_lm_learn(
     toks = F.when(
         F.length(t) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(t, r"\s+"))
-    words = (
+    with materialized(
         df.select(F.explode(toks).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=True)
-    )
-    subs = F.expr(
-        "flatten(transform(sequence(1, length(word)), s -> "
-        f"transform(sequence(1, least({max_piece_len}, length(word) - s + 1)), "
-        "l -> substring(word, s, l))))"
-    )
-    cand = (
-        words.select("freq", F.explode(subs).alias("piece"))
-        .groupBy("piece")
-        .agg(F.sum("freq").alias("cnt"))
-    )
-    singles = cand.filter(F.length("piece") == 1)
-    multis = (
-        cand.filter(F.length("piece") > 1)
-        .orderBy(F.desc("cnt"), F.asc("piece"))
-        .limit(vocab_size)
-    )
-    vocab_rows = singles.unionByName(multis).collect()
-    vocab = {r["piece"]: int(r["cnt"]) for r in vocab_rows}
-    spark = df.sparkSession
-    schema_out = "piece string, piece_len int, viterbi_count long, prob double"
-    if not vocab:
-        return spark.createDataFrame([], schema_out)
-    tot0 = float(sum(vocab.values()))
-    lp = {p: _half_up_scaled(_m.log(c / tot0)) for p, c in vocab.items()}
-    counts: "dict[str, int]" = {}
-    smoothed: "dict[str, int]" = {}
-    tot = 1.0
-    for _ in range(iterations):
-        lp_now, ml = dict(lp), max_piece_len
-
-        def _estep(batches, _lp=lp_now, _ml=ml):
-            for pdf in batches:
-                out_p, out_w = [], []
-                for word, freq in zip(pdf["word"], pdf["freq"]):
-                    for piece in _viterbi_pieces(word, _lp, _ml):
-                        out_p.append(piece)
-                        out_w.append(int(freq))
-                yield pd.DataFrame({"piece": out_p, "w": out_w})
-
-        counted = (
-            words.mapInPandas(_estep, schema="piece string, w long")
-            .groupBy("piece")
-            .agg(F.sum("w").alias("c"))
-            .collect()
+    ) as words:
+        subs = F.expr(
+            "flatten(transform(sequence(1, length(word)), s -> "
+            f"transform(sequence(1, least({max_piece_len}, length(word) - s + 1)), "
+            "l -> substring(word, s, l))))"
         )
-        counts = {r["piece"]: int(r["c"]) for r in counted}
-        smoothed = {p: counts.get(p, 0) + 1 for p in vocab}
-        tot = float(sum(smoothed.values()))
-        lp = {p: _half_up_scaled(_m.log(c / tot)) for p, c in smoothed.items()}
+        cand = (
+            words.select("freq", F.explode(subs).alias("piece"))
+            .groupBy("piece")
+            .agg(F.sum("freq").alias("cnt"))
+        )
+        singles = cand.filter(F.length("piece") == 1)
+        multis = (
+            cand.filter(F.length("piece") > 1)
+            .orderBy(F.desc("cnt"), F.asc("piece"))
+            .limit(vocab_size)
+        )
+        vocab_rows = singles.unionByName(multis).collect()
+        vocab = {r["piece"]: int(r["cnt"]) for r in vocab_rows}
+        spark = df.sparkSession
+        schema_out = "piece string, piece_len int, viterbi_count long, prob double"
+        if not vocab:
+            return spark.createDataFrame([], schema_out)
+        tot0 = float(sum(vocab.values()))
+        lp = {p: _half_up_scaled(_m.log(c / tot0)) for p, c in vocab.items()}
+        counts: "dict[str, int]" = {}
+        smoothed: "dict[str, int]" = {}
+        tot = 1.0
+        for _ in range(iterations):
+            lp_now, ml = dict(lp), max_piece_len
+
+            def _estep(batches, _lp=lp_now, _ml=ml):
+                for pdf in batches:
+                    out_p, out_w = [], []
+                    for word, freq in zip(pdf["word"], pdf["freq"]):
+                        for piece in _viterbi_pieces(word, _lp, _ml):
+                            out_p.append(piece)
+                            out_w.append(int(freq))
+                    yield pd.DataFrame({"piece": out_p, "w": out_w})
+
+            counted = (
+                words.mapInPandas(_estep, schema="piece string, w long")
+                .groupBy("piece")
+                .agg(F.sum("w").alias("c"))
+                .collect()
+            )
+            counts = {r["piece"]: int(r["c"]) for r in counted}
+            smoothed = {p: counts.get(p, 0) + 1 for p in vocab}
+            tot = float(sum(smoothed.values()))
+            lp = {p: _half_up_scaled(_m.log(c / tot)) for p, c in smoothed.items()}
     out = [
         (
             p,
@@ -1900,11 +1900,10 @@ def unigram_encode(
     toks = F.when(
         F.length(t) == 0, F.array().cast("array<string>")
     ).otherwise(F.split(t, r"\s+"))
-    words = (
+    words = materialize(
         df.select(F.explode(toks).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=True)
     )
     # train (same spec as unigram_lm_learn; shares the corpus word table)
     subs = F.expr(

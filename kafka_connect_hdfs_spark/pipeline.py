@@ -15,9 +15,10 @@ TopicPartitionWriter state machine, SURVEY.md §3.2) in set-oriented form:
 Scale: one shuffle total — the window for chunking partitions by
 (kafkaPartition, encodedPartition), which is exactly the layout the
 partitioned write wants; everything else is narrow. Writes are
-append-immutable like the reference's rename-commit (F5); Spark's file-sink
-commit protocol provides the atomicity the WAL provided (W1-W5 — SURVEY.md
-§2.5 maps them to checkpoint + ``_spark_metadata``).
+append-immutable like the reference's rename-commit (F5), and each write
+job commits atomically, so no reader sees a partial file. That is not the
+WAL's exactly-once (W1-W5, SURVEY.md §2.5): a batch that runs again after a
+crash appends again; only ``contract_names`` publishes idempotently.
 """
 
 from __future__ import annotations
@@ -284,7 +285,9 @@ def register_external_table(
     register every partition directory under ``path``. Avro tables carry
     ``avro.schema.literal`` exactly like the reference's
     (AvroHiveUtil.java:73-97), recomputed from the landed files at every
-    full sync.
+    full sync. Before any data file has landed (an empty first batch) the
+    table takes ``batch.schema`` and no digest, so the next batch fully
+    syncs.
     """
     table = table_name_for_topic(cfg, topic)
     digest = None
@@ -301,7 +304,15 @@ def register_external_table(
             else:
                 spark.catalog.refreshTable(table)
                 return
-    schema = build_sink(cfg).schema_of(spark, path)
+    try:
+        schema = build_sink(cfg).schema_of(spark, path)
+    except PySparkException as e:
+        # nothing has landed yet (an empty first batch): create the table
+        # from the writer schema, without a digest, so the first batch
+        # with data runs the full sync that infers the landed types
+        if batch is None or e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        schema, digest = batch.schema, None
     if cfg.format == "avro":
         # partition cols come from dir names, not the container schema
         from pyspark.sql import types as T

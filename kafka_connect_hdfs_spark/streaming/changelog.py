@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_connect_hdfs_spark.operators.iterate import materialized
+
 _MARK = "_cdfsync_v"
 
 
@@ -123,34 +125,35 @@ def sync_changelog_mirror(
             f"has been expired (have {versions}): the delta is no longer "
             "reconstructable — delete the mirror dir to re-bootstrap"
         )
-    feed = changelog_scan(
+    # O(delta), consumed by both filters and released once the swap wrote
+    with materialized(changelog_scan(
         spark, src_path, m, latest, options=options,
         on_overwrite=on_overwrite,
-    ).localCheckpoint(eager=True)  # O(delta); consumed by both filters
-    inserts = feed.filter(F.col("change_type") == "insert").drop(
-        "change_type", "change_version"
-    )
-    deletes = feed.filter(F.col("change_type") == "delete").drop(
-        "change_type", "change_version"
-    )
+    )) as feed:
+        inserts = feed.filter(F.col("change_type") == "insert").drop(
+            "change_type", "change_version"
+        )
+        deletes = feed.filter(F.col("change_type") == "delete").drop(
+            "change_type", "change_version"
+        )
 
-    def _upd(state: "DataFrame | None") -> DataFrame:
-        # the marker proves state exists whenever m is not None; a None
-        # state here means the dir vanished out-of-band — fail loudly
-        # rather than silently rebuilding from the delta alone
-        if state is None:
-            raise IOError(
-                f"mirror state at {mirror_path} vanished but its sync "
-                "marker survived: refusing to rebuild from a delta"
-            )
-        new_state = state.unionByName(inserts, allowMissingColumns=True)
-        new_state, dels = _aligned(new_state, deletes)
-        return new_state.exceptAll(dels)
+        def _upd(state: "DataFrame | None") -> DataFrame:
+            # the marker proves state exists whenever m is not None; a None
+            # state here means the dir vanished out-of-band — fail loudly
+            # rather than silently rebuilding from the delta alone
+            if state is None:
+                raise IOError(
+                    f"mirror state at {mirror_path} vanished but its sync "
+                    "marker survived: refusing to rebuild from a delta"
+                )
+            new_state = state.unionByName(inserts, allowMissingColumns=True)
+            new_state, dels = _aligned(new_state, deletes)
+            return new_state.exceptAll(dels)
 
-    swap_state_update(
-        spark, mirror_path, _upd, suffix="cdfsync",
-        marker=f"{_MARK}{latest}",
-    )
+        swap_state_update(
+            spark, mirror_path, _upd, suffix="cdfsync",
+            marker=f"{_MARK}{latest}",
+        )
     return {"from_version": m, "to_version": latest, "bootstrapped": False}
 
 
@@ -252,97 +255,97 @@ def sync_changelog_mirror_table(
     # consumer below (contract checks, netting window, touched keys,
     # commit_changes' emptiness probes and both writes) would otherwise
     # re-derive the whole changelog plan per action — measured at ~2x
-    # the tick cost in the scale lane
-    feed = changelog_scan(
+    # the tick cost in the scale lane; released once the commit wrote
+    with materialized(changelog_scan(
         spark, src_path, m, latest, options=options,
         on_overwrite=on_overwrite,
-    ).localCheckpoint(eager=True)
-    w = Window.partitionBy(key_col).orderBy(
-        F.col("change_version").desc(),
-        F.when(F.col("change_type") == "insert", 1).otherwise(0).desc(),
-    )
-    # rank(), not row_number(): ties (two images of one key at the same
-    # version with the same change_type — a multiset source) must BOTH
-    # survive so the contract check below can see them; for a keyed
-    # source rank and row_number pick identically
-    last = (
-        feed.withColumn("_rn", F.rank().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    final_ins = last.filter(F.col("change_type") == "insert").drop(
-        "change_type", "change_version"
-    )
-    touched = feed.select(key_col).distinct()
-    # ENFORCE the keyed-table contract instead of documenting it (a
-    # violation diverges SILENTLY: a NULL-keyed row re-inserts every
-    # tick because its tombstone matches nothing; a duplicate-keyed
-    # source nets multiple live copies down to one image). The default
-    # checks are O(delta) — they scan the feed, never a table.
-    # per-key insert/delete balance: a keyed source alternates
-    # insert/delete per key, so the range balance is -1, 0, or +1; any
-    # |balance| > 1 proves multiple live copies existed at once —
-    # same-version duplicates and cross-version double-inserts alike.
-    # The NULL-key census rides the same single aggregation (a NULL key
-    # is its own group).
-    delta = F.when(F.col("change_type") == "insert", 1).otherwise(-1)
-    bad = (
-        feed.groupBy(key_col)
-        .agg(F.sum(delta).alias("_bal"))
-        .filter(
-            F.col(key_col).isNull() | (F.abs(F.col("_bal")) > 1)
+    )) as feed:
+        w = Window.partitionBy(key_col).orderBy(
+            F.col("change_version").desc(),
+            F.when(F.col("change_type") == "insert", 1).otherwise(0).desc(),
         )
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        if bad[0][key_col] is None:
-            raise ValueError(
-                f"change feed of {src_path} carries NULL {key_col!r} "
-                "keys: the row-delta mirror needs a non-null identifier "
-                "— use sync_changelog_mirror (directory form) for such "
-                "tables"
-            )
-        raise ValueError(
-            f"change feed of {src_path} shows a {key_col!r} key with "
-            "more than one live copy inside the range: the source is "
-            "not keyed (one live row per key) — use "
-            "sync_changelog_mirror (directory/multiset form) instead"
+        # rank(), not row_number(): ties (two images of one key at the same
+        # version with the same change_type — a multiset source) must BOTH
+        # survive so the contract check below can see them; for a keyed
+        # source rank and row_number pick identically
+        last = (
+            feed.withColumn("_rn", F.rank().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
-    if validate == "mirror":
-        # the one feed-invisible violation: an insert of a key already
-        # live BEFORE the range with no intervening delete. First op
-        # per key == insert AND key currently live in the mirror ⇒
-        # violation. O(mirror key-column scan), opt-in.
-        w_first = Window.partitionBy(key_col).orderBy(
-            F.col("change_version").asc(),
-            F.when(F.col("change_type") == "delete", 0).otherwise(1).asc(),
+        final_ins = last.filter(F.col("change_type") == "insert").drop(
+            "change_type", "change_version"
         )
-        fresh = (
-            feed.withColumn("_rn", F.row_number().over(w_first))
+        touched = feed.select(key_col).distinct()
+        # ENFORCE the keyed-table contract instead of documenting it (a
+        # violation diverges SILENTLY: a NULL-keyed row re-inserts every
+        # tick because its tombstone matches nothing; a duplicate-keyed
+        # source nets multiple live copies down to one image). The default
+        # checks are O(delta) — they scan the feed, never a table.
+        # per-key insert/delete balance: a keyed source alternates
+        # insert/delete per key, so the range balance is -1, 0, or +1; any
+        # |balance| > 1 proves multiple live copies existed at once —
+        # same-version duplicates and cross-version double-inserts alike.
+        # The NULL-key census rides the same single aggregation (a NULL key
+        # is its own group).
+        delta = F.when(F.col("change_type") == "insert", 1).otherwise(-1)
+        bad = (
+            feed.groupBy(key_col)
+            .agg(F.sum(delta).alias("_bal"))
             .filter(
-                (F.col("_rn") == 1) & (F.col("change_type") == "insert")
+                F.col(key_col).isNull() | (F.abs(F.col("_bal")) > 1)
             )
-            .select(key_col)
-        )
-        clash = (
-            read_snapshot(spark, mirror_path, options=options)
-            .select(key_col)
-            .join(fresh, key_col, "left_semi")
             .limit(1)
-            .count()
+            .collect()
         )
-        if clash:
+        if bad:
+            if bad[0][key_col] is None:
+                raise ValueError(
+                    f"change feed of {src_path} carries NULL {key_col!r} "
+                    "keys: the row-delta mirror needs a non-null identifier "
+                    "— use sync_changelog_mirror (directory form) for such "
+                    "tables"
+                )
             raise ValueError(
-                f"change feed of {src_path} inserts a {key_col!r} key "
-                "that is already live in the mirror with no intervening "
-                "delete: the source is not keyed — use "
+                f"change feed of {src_path} shows a {key_col!r} key with "
+                "more than one live copy inside the range: the source is "
+                "not keyed (one live row per key) — use "
                 "sync_changelog_mirror (directory/multiset form) instead"
             )
-    mv = commit_changes(
-        spark, mirror_path, final_ins, touched, key_col, now=now,
-        properties={"mirror_of_version": latest},
-    )
+        if validate == "mirror":
+            # the one feed-invisible violation: an insert of a key already
+            # live BEFORE the range with no intervening delete. First op
+            # per key == insert AND key currently live in the mirror ⇒
+            # violation. O(mirror key-column scan), opt-in.
+            w_first = Window.partitionBy(key_col).orderBy(
+                F.col("change_version").asc(),
+                F.when(F.col("change_type") == "delete", 0).otherwise(1).asc(),
+            )
+            fresh = (
+                feed.withColumn("_rn", F.row_number().over(w_first))
+                .filter(
+                    (F.col("_rn") == 1) & (F.col("change_type") == "insert")
+                )
+                .select(key_col)
+            )
+            clash = (
+                read_snapshot(spark, mirror_path, options=options)
+                .select(key_col)
+                .join(fresh, key_col, "left_semi")
+                .limit(1)
+                .count()
+            )
+            if clash:
+                raise ValueError(
+                    f"change feed of {src_path} inserts a {key_col!r} key "
+                    "that is already live in the mirror with no intervening "
+                    "delete: the source is not keyed — use "
+                    "sync_changelog_mirror (directory/multiset form) instead"
+                )
+        mv = commit_changes(
+            spark, mirror_path, final_ins, touched, key_col, now=now,
+            properties={"mirror_of_version": latest},
+        )
     return {
         "from_version": m, "to_version": latest, "bootstrapped": False,
         "mirror_version": mv,

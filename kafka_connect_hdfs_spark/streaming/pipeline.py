@@ -2,8 +2,9 @@
 
 Reference mapping (SURVEY.md §3.2-3.3):
   - HdfsSinkTask.put() per-batch loop            → foreachBatch body
-  - WAL begin/end + rename commit (W1-W5)        → checkpoint offsets/commits +
-                                                   file-sink atomicity
+  - WAL begin/end + rename commit (W1-W5)        → checkpoint offsets/commits;
+                                                   idempotent only with
+                                                   contract names
   - recover()/offset restore (S2)                → restart from checkpointLocation
   - backpressure pause/resume (R3)               → maxOffsetsPerTrigger
   - scheduled rotation (F3)                      → trigger processingTime +
@@ -93,9 +94,12 @@ def start_ingest(
 
     foreachBatch calls the same batch ``land`` the correctness harness
     verifies — one code path for both (SURVEY.md §7.1 design stance).
-    Exactly-once: Spark writes checkpoint offsets before the batch and
-    commits after (W1/W2 analog); on restart the unfinished batch re-runs and
-    the file-sink commit protocol keeps half-written output invisible.
+    Delivery: Spark writes checkpoint offsets before the batch and commits
+    after (W1/W2 analog), and on restart the unfinished batch runs again.
+    The default path appends, so it is at-least-once: a crash between the
+    write and Spark's commit lands that batch twice. With
+    ``use_contract_names=True`` the batch is staged and published under
+    offset-encoded names, so the re-run converges on the same files.
 
     Partial chunks are NOT discarded on the streaming path (each micro-batch
     is final once its offsets commit — replay would duplicate); the

@@ -197,6 +197,22 @@ def test_empty_batch_keeps_table(spark, tmp_path, last_job):
     assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 20
 
 
+def test_empty_first_batch_creates_table(spark, tmp_path):
+    """A topic's first batch is empty: no data file exists to infer from,
+    so the table takes the batch's schema; the next batch with data fully
+    syncs and is read whole."""
+    cfg = _hourly(tmp_path)
+    topic = "reg_empty_first"
+    table = table_name_for_topic(cfg, topic)
+    batch = _records(spark, 30)
+    land(spark, batch.limit(0), cfg, topic, discard_partial=False, register_table=True)
+    assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 0
+    land(spark, batch, cfg, topic, discard_partial=False, register_table=True)
+    assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 30
+    assert len(_partitions(spark, table)) == len(_hour_dirs(f"{tmp_path}/topics/{topic}"))
+    assert dict(spark.table(table).dtypes)["month"] == "int"
+
+
 def test_register_without_batch_runs_full_sync(spark, tmp_path):
     """A direct call (no ``batch``) is the H4 sync: it drops a stale
     catalog entry set and registers exactly the directories on disk."""

@@ -155,8 +155,11 @@ def test_star_equals_propagation_on_chain_with_self_pairs(spark):
     assert (99, 99) in a
 
 
-def test_propagation_converges_with_string_ids(spark):
-    """Non-numeric ids exercise the hash-signature convergence fallback."""
+@pytest.mark.parametrize("method", ["propagation", "star"])
+def test_propagation_converges_with_string_ids(spark, method):
+    """Non-numeric ids exercise the hash-signature convergence fallback
+    (propagation's non-integral ``_label_sig`` branch; star always
+    hashes)."""
     from kafka_connect_hdfs_spark.operators.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(
@@ -164,7 +167,7 @@ def test_propagation_converges_with_string_ids(spark):
     )
     got = {
         r["node"]: r["cluster_id"]
-        for r in duplicate_clusters(pairs).collect()
+        for r in duplicate_clusters(pairs, method=method).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
