@@ -19,8 +19,9 @@ which names a file from offsets it already tracks and renames it once):
      skip ``_``-prefixed directories) — one ``part-*`` file per
      ``file_name=`` directory.
   3. the driver finds every staged file with ONE ``globStatus`` over
-     ``_contract_staging/<partition dirs>/file_name=*/part-*``, renames
-     each to ``<topic>/<partition dirs>/<unescaped file_name>`` via the
+     ``_contract_staging/<partition dirs>/file_name=*/part-*``, fetches
+     the path strings 16 to a py4j call (parsed in Python), renames each
+     to ``<topic>/<partition dirs>/<unescaped file_name>`` via the
      Hadoop FileSystem API (the same atomic rename the reference's
      commitFile uses, HdfsStorage.java:151-164) and finally drops the
      staging root.
@@ -32,7 +33,8 @@ min/max offsets, so manifest and disk cannot disagree.
 Scale: the glob lists only the staging root, i.e. this batch's files plus
 those of a crashed one — never the topic's committed history. Per committed
 file: one exists check and one rename, pure NameNode metadata ops (the
-reference's own per-file commit cost); one mkdirs per partition directory
+reference's own per-file commit cost), and four py4j calls in all (two
+``Path``s, exists, rename); one mkdirs per partition directory
 and one recursive delete per batch. The data itself moves once (the chunk
 window's shuffle). The filesystem handle comes from ``statedir.hadoop_fs``,
 the fault-injection seam.
@@ -68,6 +70,7 @@ from kafka_connect_hdfs_spark.sinks import build_sink
 
 STAGING = "_contract_staging"
 NAME_DIR = "file_name="
+_PATHS_PER_CALL = 16
 _WRITE_ID = re.compile(r"^part-\d+-([^.]+)")
 
 
@@ -109,6 +112,24 @@ def land_with_contract_names(
     return res
 
 
+def _staged_paths(spark: SparkSession, statuses) -> list[str]:
+    """The path strings of a ``globStatus`` result, ``_PATHS_PER_CALL`` per
+    py4j call instead of several calls per file. A py4j answer longer than
+    8 KB stalls ~40 ms on loopback (the JVM writes it in 8 KB pieces and
+    the second waits for a delayed ACK); 16 staged paths stay under that,
+    and a longer answer is only slower."""
+    if statuses is None:
+        return []
+    jvm = spark._jvm
+    paths = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    )
+    out: list[str] = []
+    for i in range(0, paths.length(), _PATHS_PER_CALL):
+        out += paths.slice(i, i + _PATHS_PER_CALL).mkString("\n").split("\n")
+    return out
+
+
 def _publish(spark: SparkSession, base_path: str, depth: int) -> None:
     """Rename every staged ``<dirs>/file_name=<name>/part-*`` (``depth``
     partition-directory levels under ``base_path``'s staging root) to
@@ -120,19 +141,19 @@ def _publish(spark: SparkSession, base_path: str, depth: int) -> None:
     staging = f"{base_path}/{STAGING}"
     fs, Path = statedir.hadoop_fs(spark, staging)
     pattern = "/".join([staging] + ["*"] * depth + [f"{NAME_DIR}*", "part-*"])
-    chunks: dict[str, list] = {}
-    for status in fs.globStatus(Path(pattern)) or []:
-        src = status.getPath()
-        chunks.setdefault(src.getParent().toString(), []).append(src)
-    for name_dir, files in chunks.items():
-        split = max(Counter(_write_id(f.getName()) for f in files).values())
+    chunks: dict[str, list[str]] = {}
+    for src in _staged_paths(spark, fs.globStatus(Path(pattern))):
+        name_dir, _, part = src.rpartition("/")
+        chunks.setdefault(name_dir, []).append(part)
+    for name_dir, parts in chunks.items():
+        split = max(Counter(map(_write_id, parts)).values())
         if split > 1:
             raise RuntimeError(
                 f"chunk {name_dir} was split into {split} files by one "
                 "write; expected 1 (maxRecordsPerFile below flush.size?)"
             )
     made: set[str] = set()
-    for name_dir, files in chunks.items():
+    for name_dir, parts in chunks.items():
         *dirs, name = name_dir.split("/")[-(depth + 1):]
         parent = "/".join([base_path, *dirs])
         if parent not in made:
@@ -140,7 +161,7 @@ def _publish(spark: SparkSession, base_path: str, depth: int) -> None:
             made.add(parent)
         target = Path(f"{parent}/{unquote(name[len(NAME_DIR):])}")
         if not fs.exists(target):  # replay: identical content already committed
-            fs.rename(files[0], target)
+            fs.rename(Path(f"{name_dir}/{parts[0]}"), target)
     fs.delete(Path(staging), True)
 
 

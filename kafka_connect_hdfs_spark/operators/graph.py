@@ -603,9 +603,12 @@ def label_propagation_communities(
     closure), LPA finds *densely-linked groups inside* a component — the
     community structure of the co-visitation graph, not its reachability.
 
-    Scale: per round one |edges|-shuffle groupBy (node, label) with
-    map-side partial counts, then one |nodes|-bounded max-of-struct agg —
-    no window functions, no edge×edge joins. The symmetrized edge list
+    Scale: per round the raw (node, neighbour label) rows — 2·|edges| of
+    them — are repartitioned by node in one exchange, and the (node,
+    label) count and the per-node min-of-struct argmax both run on that
+    partitioning with no further shuffle. No map-side partial count runs
+    before the exchange, so a hub's neighbour rows all reach one reducer.
+    No window functions, no edge×edge joins. The symmetrized edge list
     is materialized for the sweeps and released once the final labels
     are. Fixed round count (LPA in practice
     stabilizes in < 5 sweeps; Raghavan §4) keeps the cost bounded and the
