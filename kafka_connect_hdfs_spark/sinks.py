@@ -16,8 +16,10 @@ Reference:
 
 Spark-first: each sink is ``df.write.format(...)`` with the reference's
 profile defaults. The write is partitioned by the partitioner's columns so
-Catalyst prunes on read; Avro needs the built-in ``avro`` format (Spark 4
-bundles spark-avro in our image — gated with a runtime check anyway).
+Catalyst prunes on read. Avro uses the JVM ``avro`` datasource (spark-avro)
+only where a runtime probe finds it; Spark 4 does not ship it in its
+``jars/``, so a stock install writes through the pure-Python container codec
+(``PurePythonAvroSink``).
 """
 
 from __future__ import annotations
@@ -184,6 +186,11 @@ def _times_as_ints(batch, keep: list[str]):
     )
 
 
+#: the reference's ``avro.codec`` enumeration
+#: (avro/AvroRecordWriterProvider.java:69), all written by formats.avro_io
+AVRO_CODECS = ("null", "deflate", "snappy", "bzip2")
+
+
 class PurePythonAvroSink(FormatSink):
     """O1/O5 without spark-avro: lands genuine Avro Object Container Files
     via the dependency-free codec in formats/avro_io.py (container spec:
@@ -194,9 +201,14 @@ class PurePythonAvroSink(FormatSink):
     hands each task Arrow batches, whose rows stream (across batch
     boundaries) through the schema's compiled encoders — no driver collect,
     no pickled ``Row``s. Each task returns one count row, collected by the
-    same job. Hive-style partition dirs are grouped within each task,
-    mirroring the reference's one-writer-per-encodedPartition layout
-    (TopicPartitionWriter.getWriter). Every container is written under a
+    same job. The sink writes the partitioning it is given, as Spark's own
+    file writer does: each task sorts its rows by the partition columns and
+    writes one container per Hive-style partition directory it holds, so a
+    directory fed by several tasks gets one file from each. A caller that
+    wants one file per directory clusters the frame first (the contract
+    path's chunk window puts each ``file_name`` group in one task, like the
+    reference's one writer per encodedPartition,
+    TopicPartitionWriter.getWriter). Every container is written under a
     hidden temporary name and renamed to its ``part-`` name once closed
     (``avro_io.write_container``), so a killed task attempt leaves no
     truncated file that a reader or a commit glob would see. Every write
@@ -229,13 +241,10 @@ class PurePythonAvroSink(FormatSink):
         codec = self.options.get("compression", "null")
         if codec == "uncompressed":  # spark-avro's alias for the null codec
             codec = "null"
-        if codec not in ("null", "deflate", "snappy", "bzip2"):
-            # The full reference codec enumeration
-            # (avro/AvroRecordWriterProvider.java:69) is supported
-            # natively since r11 (snappy via the pure-Python block codec
-            # in formats.avro_io). Anything else: never downgrade
-            # silently — fail by default, warn-and-downgrade only on
-            # explicit opt-in.
+        if codec not in AVRO_CODECS:
+            # Anything outside the reference's codec enumeration: never
+            # downgrade silently — fail by default, warn-and-downgrade
+            # only on explicit opt-in.
             if self.options.get("allowCodecFallback", False):
                 import warnings
 
@@ -250,7 +259,7 @@ class PurePythonAvroSink(FormatSink):
             else:
                 raise ValueError(
                     f"avro codec {codec!r} is not supported by the "
-                    "pure-Python fallback writer (only null/deflate/bzip2). "
+                    f"pure-Python fallback writer (only {'/'.join(AVRO_CODECS)}). "
                     "Install spark-avro for native codecs, or pass "
                     "allowCodecFallback=True to downgrade to 'null'."
                 )
@@ -279,9 +288,7 @@ class PurePythonAvroSink(FormatSink):
         run_id = uuid.uuid4().hex[:8]  # unique per write call — appends never collide
 
         if pcols:
-            df = df.repartition(*[F.col(c) for c in pcols]).sortWithinPartitions(
-                *[F.col(c) for c in pcols]
-            )
+            df = df.sortWithinPartitions(*pcols)
 
         def write_part(batches):
             import itertools

@@ -319,6 +319,17 @@ def test_unsupported_codec_fails_loudly_not_silently(spark, tmp_path):
     assert lenient.read(spark, out).count() == 1
 
 
+def test_unsupported_codec_error_names_supported_codecs(spark, tmp_path):
+    """The refusal lists every codec the writer does support."""
+    from kafka_connect_hdfs_spark.sinks import AVRO_CODECS
+
+    sink = PurePythonAvroSink("avro", ".avro", {"compression": "lz4"})
+    with pytest.raises(ValueError) as err:
+        sink.write(spark.createDataFrame([Row(v=1)]), f"{tmp_path}/c", [])
+    assert set(AVRO_CODECS) == {"null", "deflate", "snappy", "bzip2"}
+    assert all(codec in str(err.value) for codec in AVRO_CODECS)
+
+
 def test_schema_of_prefers_max_committed_offset(spark, tmp_path):
     """Reference bootstraps from the file with the MAX END OFFSET
     (FileUtils.fileStatusWithMaxOffset), not the newest mtime: a replayed

@@ -108,6 +108,64 @@ def test_contract_names_replay_idempotent(spark, records, tmp_path):
     assert read_committed(spark, cfg, "events").count() == n_first
 
 
+def test_contract_avro_multi_task_batch(spark, records, tmp_path, monkeypatch, last_job):
+    """With AQE coalescing off the chunk window's exchange keeps all its
+    reduce partitions, so the Avro write runs several tasks. The sink
+    writes the partitioning it is given: each ``file_name`` group still
+    lands in one task, so no chunk is split, and every file holds exactly
+    its name's contiguous offset range, in ascending order."""
+    from pyspark.sql import Window
+
+    from kafka_connect_hdfs_spark.formats.avro_io import read_container
+    from kafka_connect_hdfs_spark.sinks import jvm_avro_available
+
+    if jvm_avro_available(spark):
+        pytest.skip("JVM avro datasource present: the Parquet-like path runs")
+    # offsets contiguous per Kafka partition, materialized so the batch's
+    # own jobs are the only ones counted
+    by_partition = Window.partitionBy("partition").orderBy("event_id")
+    records.drop("props").withColumn(
+        "offset", F.row_number().over(by_partition) - 1
+    ).write.parquet(f"{tmp_path}/src")
+    src = spark.read.parquet(f"{tmp_path}/src")
+    want = sorted((r["partition"], r["offset"]) for r in src.collect())
+
+    per_task = []
+    frame_cls = type(records)
+    collect = frame_cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        per_task.extend(rows)
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    cfg = HdfsSinkConfig(url=f"file://{tmp_path}/out", format="avro", flush_size=100)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        before = last_job()
+        land_with_contract_names(spark, src, cfg, topic="events", discard_partial=False)
+        jobs = last_job() - before
+    finally:
+        spark.conf.set(key, prev)
+    monkeypatch.undo()
+    assert jobs == 2
+    # one count row per write task; several of them wrote records
+    assert len(per_task) >= 2
+    assert sum(1 for r in per_task if r["n"]) >= 2
+
+    files = glob.glob(f"{tmp_path}/out/topics/events/partition=*/events+*.avro")
+    assert files
+    for fp in files:
+        _, partition, start, end = os.path.basename(fp)[: -len(".avro")].split("+")
+        assert os.path.basename(os.path.dirname(fp)) == f"partition={int(partition)}"
+        _, rows = read_container(fp)
+        assert [r["offset"] for r in rows] == list(range(int(start), int(end) + 1))
+    assert sorted(_landed_offsets(spark, cfg)) == want
+
+
 def _landed_offsets(spark, cfg):
     from kafka_connect_hdfs_spark.sinks import build_sink
 
@@ -187,13 +245,14 @@ def test_split_chunk_raises(spark, records, tmp_path):
     assert not glob.glob(f"{tmp_path}/topics/events/partition=*/events+*")
 
 
-@pytest.mark.parametrize("fmt,jobs", [("avro", 3), ("parquet", 2)])
+@pytest.mark.parametrize("fmt,jobs", [("avro", 2), ("parquet", 2)])
 def test_contract_land_job_count(
     spark, records, tmp_path, monkeypatch, last_job, fmt, jobs
 ):
     """One contract-named batch is one pass: the chunk window's shuffle,
-    the write (the Avro fallback adds its partition-dir repartition), and
-    no job that re-runs the assignment to collect a manifest."""
+    the write (the Avro fallback reuses the chunk window's partitioning,
+    as Spark's file writer does), and no job that re-runs the assignment
+    to collect a manifest."""
     from kafka_connect_hdfs_spark.sinks import jvm_avro_available
 
     if fmt == "avro" and jvm_avro_available(spark):
