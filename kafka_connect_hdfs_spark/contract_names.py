@@ -121,8 +121,8 @@ def _staged_paths(spark: SparkSession, statuses) -> list[str]:
     if statuses is None:
         return []
     jvm = spark._jvm
-    paths = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
-        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    paths = getattr(jvm, "scala.collection.immutable.ArraySeq").unsafeWrapArray(
+        getattr(jvm, "org.apache.hadoop.fs.FileUtil").stat2Paths(statuses)
     )
     out: list[str] = []
     for i in range(0, paths.length(), _PATHS_PER_CALL):

@@ -523,7 +523,8 @@ def write_container(
             meta = io.BytesIO()
             write_long(meta, 2)
             write_bytes(meta, b"avro.schema")
-            write_bytes(meta, json.dumps(avro_schema).encode())
+            # compact, as Avro's Schema.toString() writes it
+            write_bytes(meta, json.dumps(avro_schema, separators=(",", ":")).encode())
             write_bytes(meta, b"avro.codec")
             write_bytes(meta, codec.encode())
             write_long(meta, 0)

@@ -339,7 +339,7 @@ def merge_keyed(
     # tree — drop via rename-then-delete (roll-forward recoverable).
     # Leaf names derive from Spark's own partition-path escaping so the
     # comparison matches what the writer produced.
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    esc = getattr(jvm, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils")
     expected = {
         f"{prefix}{esc.escapePathName(str(v))}"
         for v in touched

@@ -43,9 +43,9 @@ def _checkpoint(df: DataFrame) -> "tuple[DataFrame, int]":
     jvm, extra = df.sparkSession._jvm, cp.otherCopyArgs()  # (session, stats, constraints)
     plan = cp.copy(
         cp.output(), cp.rdd(), cp.outputPartitioning(), cp.outputOrdering(), cp.isStreaming(),
-        cp.stream(), extra.apply(0), jvm.scala.Some(stats), extra.apply(2),
+        cp.stream(), extra.apply(0), getattr(jvm, "scala.Some")(stats), extra.apply(2),
     )
-    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(extra.apply(0), plan)
+    jdf = getattr(jvm, "org.apache.spark.sql.classic.Dataset").ofRows(extra.apply(0), plan)
     return DataFrame(jdf, df.sparkSession), rows
 
 

@@ -251,6 +251,9 @@ SYNC_PROPERTY = "sink.sync.digest"
 #: partition clauses per ``ALTER TABLE ... ADD`` statement
 _ADD_BATCH = 100
 
+#: Spark's partition-path escaping, looked up by full name (one py4j call)
+_CATALOG_UTILS = "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
+
 
 def register_external_table(
     spark: SparkSession,
@@ -272,7 +275,8 @@ def register_external_table(
     Steady state (H3): given ``batch`` — what ``land`` just wrote — and a
     table whose :data:`SYNC_PROPERTY` matches that write's format, location
     and writer schema, only the batch's partition directories are added
-    (``ADD IF NOT EXISTS``) and the table refreshed. No schema inference,
+    (``ADD IF NOT EXISTS``, which also refreshes the table; a batch with no
+    partition to add refreshes it directly). No schema inference,
     DROP, CREATE or directory listing; the catalog work follows the batch,
     not the table's history.
 
@@ -295,14 +299,17 @@ def register_external_table(
         digest = _sync_digest(cfg, path, batch.schema)
         if _synced_digest(spark, table) == digest:
             try:
-                _add_partitions(spark, table, path, partition_columns, batch.partitions)
+                altered = _add_partitions(spark, table, path, partition_columns, batch.partitions)
             except PySparkException as e:
                 # a value that no longer casts to the inferred partition
                 # type: re-infer the types at a full sync
                 if e.getCondition() != "CAST_INVALID_INPUT":
                     raise
             else:
-                spark.catalog.refreshTable(table)
+                if not altered:
+                    # an ALTER ... ADD PARTITION refreshes the table itself,
+                    # even when every partition already exists
+                    spark.catalog.refreshTable(table)
                 return
     try:
         schema = build_sink(cfg).schema_of(spark, path)
@@ -359,16 +366,20 @@ def _add_partitions(
     path: str,
     partition_columns: "list[str]",
     partitions: list,
-) -> None:
+) -> bool:
     """H3 — ``ALTER TABLE ... ADD IF NOT EXISTS PARTITION (...) LOCATION``
     for each tuple of raw partition values, :data:`_ADD_BATCH` clauses per
-    statement. The one way this module registers a partition: the
+    statement; whether any statement ran (each one refreshes the table,
+    Spark's ``AlterTableAddPartitionCommand``). The one way this module
+    registers a partition: the
     location is the directory ``partitionBy`` wrote (Spark's own escaping,
     ``ExternalCatalogUtils.getPartitionPathString``; null and empty values
     map to ``__HIVE_DEFAULT_PARTITION__``) and the spec gives the raw
     string, which Spark casts to the column's catalog type (``month='01'``
     is stored as ``month=1``), so re-adding a directory is a no-op."""
-    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    if not partitions:
+        return False
+    utils = getattr(spark._jvm, _CATALOG_UTILS)
     default = f"={utils.DEFAULT_PARTITION_NAME()}"
     # Hadoop's qualified spelling (``file:/x``, not ``file:///x``), as file
     # listings produce it: full scans over ``file:///`` partition locations
@@ -388,6 +399,7 @@ def _add_partitions(
         spark.sql(
             f"ALTER TABLE {table} ADD IF NOT EXISTS " + " ".join(clauses[i:i + _ADD_BATCH])
         )
+    return True
 
 
 def _partition_dirs(spark: SparkSession, path: str, partition_columns: "list[str]") -> list:
@@ -396,7 +408,7 @@ def _partition_dirs(spark: SparkSession, path: str, partition_columns: "list[str
     the H4 walk (FileUtils.getDirectories, FileUtils.java:151-176), one
     listing per directory through ``statedir.hadoop_fs``."""
     fs, Path = statedir.hadoop_fs(spark, path)
-    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    utils = getattr(spark._jvm, _CATALOG_UTILS)
     level = [((), Path(path))] if fs.exists(Path(path)) else []
     for c in partition_columns:
         prefix = f"{utils.escapePathName(c)}="

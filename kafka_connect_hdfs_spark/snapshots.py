@@ -52,17 +52,7 @@ def list_snapshots(spark: SparkSession, path: str) -> "list[int]":
 
 
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    fs, Path = statedir.hadoop_fs(spark, path)
-    p = Path(f"{_manifest_dir(path)}/v{version}.json")
-    stream = fs.open(p)
-    try:
-        jvm = spark._jvm
-        out = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, out, 65536, False)
-        data = bytes(out.toByteArray())
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return json.loads(statedir.read_text(spark, f"{_manifest_dir(path)}/v{version}.json"))
 
 
 def _commit_ts(

@@ -51,9 +51,10 @@ def hadoop_fs(spark: SparkSession, path: str):
     monkeypatches this function to wrap the returned fs in a
     mutation-counting proxy that dies at every rename/delete/create
     boundary in turn — so recovery is proven at EVERY boundary
-    mechanically, not at hand-picked ones."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
+    mechanically, not at hand-picked ones. JVM classes are looked up by
+    full name: one py4j call, where ``jvm.org.apache...`` attribute
+    chains make one failing class lookup per package level."""
+    Path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     fs = Path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, Path
 
@@ -74,8 +75,8 @@ def read_text(spark: SparkSession, path) -> str:
     stream = fs.open(p)
     try:
         jvm = spark._jvm
-        buf = jvm.java.io.ByteArrayOutputStream()
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, buf, 65536, False)
+        buf = getattr(jvm, "java.io.ByteArrayOutputStream")()
+        getattr(jvm, "org.apache.hadoop.io.IOUtils").copyBytes(stream, buf, 65536, False)
         return bytes(buf.toByteArray()).decode("utf-8")
     finally:
         stream.close()

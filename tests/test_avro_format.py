@@ -122,6 +122,35 @@ def test_container_roundtrip_all_types(tmp_path, codec):
             assert have[k] == v, (k, v, have[k])
 
 
+def test_container_header_schema_is_compact(tmp_path):
+    """The header carries the schema as compact JSON (no spaces after
+    separators, as Avro's ``Schema.toString()`` writes it); it parses to the
+    same schema, and both the sink's reader and perfbench's independent
+    decoder read the container."""
+    import json
+
+    from kafka_connect_hdfs_spark.formats.avro_io import read_bytes, read_schema
+    from perfbench.checks import avro_offsets
+
+    schema = {
+        "type": "record", "name": "r", "fields": [
+            {"name": "partition", "type": "int"},
+            {"name": "offset", "type": "long"},
+            {"name": "s", "type": ["null", "string"], "default": None},
+        ],
+    }
+    p = str(tmp_path / "t.avro")
+    write_container(p, schema, iter([{"partition": 3, "offset": 7, "s": "x"}]))
+    with open(p, "rb") as fh:
+        fh.read(4)
+        assert read_long(fh) == 2
+        assert read_bytes(fh) == b"avro.schema"
+        header = read_bytes(fh).decode()
+    assert ", " not in header and ": " not in header
+    assert json.loads(header) == schema == read_schema(p)
+    assert avro_offsets(p) == ([3], [7])
+
+
 def test_spark_partitioned_write_and_readback(spark, sf_dir, tmp_path):
     from kafka_connect_hdfs_spark.session import load_table
 

@@ -242,3 +242,80 @@ def test_register_unpartitioned_table(spark, tmp_path):
     df.write.mode("append").parquet(path)
     register_external_table(spark, cfg, "reg_flat", [], path, batch=BatchWrite(df.schema, []))
     assert spark.table(table).count() == 4
+
+
+def test_relanded_hours_visible_without_second_refresh(spark, tmp_path, monkeypatch):
+    """A batch that writes only into hours already registered is read in
+    full by the next query. Its ``ALTER TABLE ... ADD IF NOT EXISTS``
+    refreshes the table (Spark's ``AlterTableAddPartitionCommand`` does so
+    even when every partition exists), so the steady path makes no
+    ``refreshTable`` call of its own."""
+    cfg = _hourly(tmp_path)
+    table = table_name_for_topic(cfg, "reg_rehour")
+    land(spark, _records(spark, 60), cfg, "reg_rehour", discard_partial=False,
+         register_table=True)  # all six hours
+    assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 60
+    parts = _partitions(spark, table)
+
+    refreshes = []
+    catalog = type(spark.catalog)
+    refresh = catalog.refreshTable
+    monkeypatch.setattr(
+        catalog, "refreshTable", lambda self, t: refreshes.append(t) or refresh(self, t)
+    )
+    land(spark, _records(spark, 30, start=60), cfg, "reg_rehour", discard_partial=False,
+         register_table=True)
+    monkeypatch.undo()
+    assert refreshes == []
+    assert _partitions(spark, table) == parts
+    assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 90
+
+
+def _listing_jobs(spark, after: int) -> list:
+    """Task counts of the ``Listing leaf files ...`` jobs (Spark's parallel
+    partition discovery) newer than job id ``after``, from the status store."""
+    sc = spark._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)  # newest first
+    tasks = []
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        if job.jobId() <= after:
+            break
+        desc = job.description()
+        if desc.isDefined() and desc.get().startswith("Listing leaf files"):
+            tasks.append(job.numTasks())
+    return tasks
+
+
+def test_catalog_scan_lists_partitions_on_driver(spark, tmp_path, last_job):
+    """A table of 40 hour partitions (over Spark's default 32-directory
+    threshold, under the session's) is listed on the driver after each
+    land's refresh: the land and the full scan after it run no listing job."""
+    cfg = _hourly(tmp_path)
+    table = table_name_for_topic(cfg, "reg_listing")
+    land(spark, _records(spark, 7 * 49, hours=40), cfg, "reg_listing",
+         discard_partial=False, register_table=True)
+    assert len(_partitions(spark, table)) == 40
+    before = last_job()
+    land(spark, _records(spark, 40, start=7 * 49, hours=40), cfg, "reg_listing",
+         discard_partial=False, register_table=True)
+    assert spark.sql(f"SELECT count(*) FROM {table}").first()[0] == 7 * 49 + 40
+    assert _listing_jobs(spark, before) == []
+
+
+def test_listing_job_runs_one_wave_of_cores(spark, tmp_path, last_job):
+    """Past the driver-listing threshold the listing job has one task per
+    core (``get_spark``'s ``local[N]``), not one per directory."""
+    from pyspark.sql import functions as F
+
+    threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = int(cpus) if cpus.isdigit() else 32
+    path = str(tmp_path / "wide")
+    n = threshold + 8
+    spark.range(n).withColumn("p", F.col("id")).write.partitionBy("p").parquet(path)
+    before = last_job()
+    assert spark.read.parquet(path).count() == n
+    tasks = _listing_jobs(spark, before)
+    assert len(tasks) == 1 and tasks[0] <= cores
