@@ -251,9 +251,6 @@ SYNC_PROPERTY = "sink.sync.digest"
 #: partition clauses per ``ALTER TABLE ... ADD`` statement
 _ADD_BATCH = 100
 
-#: Spark's partition-path escaping, looked up by full name (one py4j call)
-_CATALOG_UTILS = "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils"
-
 
 def register_external_table(
     spark: SparkSession,
@@ -379,7 +376,7 @@ def _add_partitions(
     is stored as ``month=1``), so re-adding a directory is a no-op."""
     if not partitions:
         return False
-    utils = getattr(spark._jvm, _CATALOG_UTILS)
+    utils = getattr(spark._jvm, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils")
     default = f"={utils.DEFAULT_PARTITION_NAME()}"
     # Hadoop's qualified spelling (``file:/x``, not ``file:///x``), as file
     # listings produce it: full scans over ``file:///`` partition locations
@@ -408,7 +405,7 @@ def _partition_dirs(spark: SparkSession, path: str, partition_columns: "list[str
     the H4 walk (FileUtils.getDirectories, FileUtils.java:151-176), one
     listing per directory through ``statedir.hadoop_fs``."""
     fs, Path = statedir.hadoop_fs(spark, path)
-    utils = getattr(spark._jvm, _CATALOG_UTILS)
+    utils = getattr(spark._jvm, "org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils")
     level = [((), Path(path))] if fs.exists(Path(path)) else []
     for c in partition_columns:
         prefix = f"{utils.escapePathName(c)}="

@@ -26,23 +26,31 @@ Over ``spark.sql.sources.parallelPartitionDiscovery.threshold`` directories
 (Spark's default 32) Spark lists them in a job of one task per directory, up
 to ``...parallelPartitionDiscovery.parallelism`` (default 10000): ~4 ms per
 directory here. ``get_spark`` sets the threshold to :data:`LISTING_THRESHOLD`
-(128) and the parallelism to the ``local[N]`` core count, so a listing job
-that still runs finishes in one wave. Median of 5
+and the parallelism to the ``local[N]`` core count, so a listing job that
+still runs finishes in one wave. Median of 5
 ``spark.read.schema(...).parquet(*dirs)`` calls over N directories of 10
 small Parquet files each, local FS, 4 vCPU, in ms:
 
     dirs   Spark defaults   driver only   job of 4 tasks   these settings
-      32               70            64              178               67
-      64              473            75              172               82
-     128              743           112              184              114
-     256             1262           121              197              248
-     512             2313           263              284              282
-    1024             4334           464              486              427
+      32               58            64              176               69
+      64              423            78              165               83
+     128              695           104              191              125
+     256             1166           139              226              159
+     512             2246           262              284              221
+     768             3433           377              401              397
+    1024             4061           477              442              481
+    1536             6736           780              802              808
+    2048             8258           916              877              844
 
-On the local FS driver listing stays ahead of a 4-task job up to ~512-1024
-directories. HDFS pays a NameNode round trip per directory on the driver
-(~1 ms, an estimate: no HDFS was measured), which moves its crossover lower,
-hence 128 rather than 512.
+The "job of 4 tasks" column is measured after some 25 listing jobs in the
+same session. Over six rounds a job that warm beats the driver from 768
+directories on (median 368 against 385 ms), but a session's first listing
+jobs are slower: at 768 directories 487-543 ms, against 358-393 ms on the
+driver. In a fresh session the two tie at about 1024 directories, which is
+the threshold. A Hadoop file system that pays a NameNode round trip per
+directory listed on the driver (HDFS) should cross over lower; that is
+unverified, since no HDFS measurement exists here, and the value is to be
+revisited once one does.
 """
 
 from __future__ import annotations
@@ -55,7 +63,7 @@ from pyspark.sql import SparkSession
 DAEMON_MODULE = "sink_pyspark_daemon"
 
 #: directories a file listing takes on the driver before it runs a Spark job
-LISTING_THRESHOLD = 128
+LISTING_THRESHOLD = 1024
 
 
 def _worker_resolves(module: str) -> bool:

@@ -306,16 +306,15 @@ def test_catalog_scan_lists_partitions_on_driver(spark, tmp_path, last_job):
 
 def test_listing_job_runs_one_wave_of_cores(spark, tmp_path, last_job):
     """Past the driver-listing threshold the listing job has one task per
-    core (``get_spark``'s ``local[N]``), not one per directory."""
+    core (``get_spark``'s ``local[N]``, the default parallelism), not one
+    per directory."""
     from pyspark.sql import functions as F
 
     threshold = int(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cores = int(cpus) if cpus.isdigit() else 32
     path = str(tmp_path / "wide")
     n = threshold + 8
     spark.range(n).withColumn("p", F.col("id")).write.partitionBy("p").parquet(path)
     before = last_job()
     assert spark.read.parquet(path).count() == n
     tasks = _listing_jobs(spark, before)
-    assert len(tasks) == 1 and tasks[0] <= cores
+    assert len(tasks) == 1 and tasks[0] <= spark.sparkContext.defaultParallelism
